@@ -37,12 +37,13 @@ def install_bround(con):
 
 def load_bars(con, xetra):
     """Every CSV of the layout as table `bars`, with the date of the
-    directory each row was read from as `file_date`; installs `bround`."""
+    directory each row was read from as `file_date`; installs `bround`.
+    The columns are given, so sniffing (slow over many files) is off."""
     install_bround(con)
     src = os.path.join(xetra, "*", "*.csv").replace("'", "''")
     con.sql(f"""CREATE OR REPLACE TABLE bars AS
       SELECT *, regexp_extract(filename, '([0-9-]+)/[^/]*$', 1) AS file_date
-      FROM read_csv('{src}', header = true, filename = true,
+      FROM read_csv('{src}', header = true, filename = true, auto_detect = false,
                     columns = {CSV_COLUMNS})""")
 
 

@@ -17,10 +17,7 @@ Every random draw comes from ``numpy.random.default_rng(seed)``, so the same
 seed gives byte-identical files. Event timestamps are distinct
 microseconds, so (ISIN, Date) groups never tie on Time and the report's
 first/last prices are well defined.
-
-Usage: python3 perfbench/gen.py --seed N --out DIR [--days 30] [--replicas R]
 """
-import argparse
 import datetime as dt
 import json
 import os
@@ -161,8 +158,13 @@ def write_xetra(rng, events, out, replicas):
     width = int(user.max()) + 1
     offsets = np.sort(rng.choice(np.arange(1, 1000), replicas, replace=False))
     offsets = offsets * 10 ** len(str(width))
-    isin = [np.array([f"DE{u + o:010d}" for u in user]) for o in offsets]
-    time = np.array([str(t)[11:26] for t in ts])
+    isin = [[f"DE{u + o:010d}" for u in user] for o in offsets]
+    # each line is an ISIN and the event's columns after it
+    rest = []
+    for i, t in enumerate(ts):
+        p = repr(float(value[i]))
+        rest.append(f",{etype[i].upper()},{str(t)[:10]},{str(t)[11:26]},"
+                    f"{p},{p},{p},{p},{k[i]}")
     dates = sorted({str(d) for d in day})
     rows = files = nbytes = 0
     for d in dates:
@@ -171,12 +173,7 @@ def write_xetra(rng, events, out, replicas):
         in_day = day == np.datetime64(d)
         for h in range(24):
             idx = np.nonzero(in_day & (hour == h))[0]
-            lines = []
-            for r in range(replicas):
-                for i in idx:
-                    p = repr(float(value[i]))
-                    lines.append(f"{isin[r][i]},{etype[i].upper()},{d},"
-                                 f"{time[i]},{p},{p},{p},{p},{k[i]}")
+            lines = [isin[r][i] + rest[i] for r in range(replicas) for i in idx]
             lines = [lines[j] for j in rng.permutation(len(lines))]
             body = "\n".join([CSV_HEADER] + lines) + "\n"
             path = os.path.join(out, d, f"{d}_BINS_XETR{h:02d}.csv")
@@ -204,20 +201,3 @@ def generate(seed, out, days=30, replicas=1, sf=0.01, events_per_day=334):
     with open(os.path.join(out, "manifest.json"), "w") as f:
         json.dump(manifest, f, indent=1, sort_keys=True)
     return manifest
-
-
-def main():
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--seed", type=int, required=True)
-    ap.add_argument("--out", required=True)
-    ap.add_argument("--days", type=int, default=30)
-    ap.add_argument("--replicas", type=int, default=1)
-    ap.add_argument("--sf", type=float, default=0.01)
-    ap.add_argument("--events-per-day", type=int, default=334)
-    a = ap.parse_args()
-    m = generate(a.seed, a.out, a.days, a.replicas, a.sf, a.events_per_day)
-    print(json.dumps({k: m[k] for k in ("csv_rows", "csv_files", "csv_bytes")}))
-
-
-if __name__ == "__main__":
-    main()

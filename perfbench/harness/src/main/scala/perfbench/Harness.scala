@@ -19,24 +19,28 @@ import org.apache.spark.sql.types._
 
 /** One benchmark run in one JVM: a closed loop with one client.
   *
-  * Two stages, each iterated on fresh state at least `minIters` times and
-  * until `seconds` have passed:
-  *  - etl: a cold backfill of the first `backfillDays` dates (the batch
-  *    job, then the stream job from an empty checkpoint); then each
+  * Two stages, each iterated on fresh state:
+  *  - etl: a cold backfill of all dates but the last [[DailyRuns]] (the
+  *    batch job, then the stream job from an empty checkpoint); then each
   *    remaining date lands and both jobs run once.
   *  - mix: the query mix memo-cold in a fresh session, then memo-warm in
   *    the same session.
-  * An untraced run times its workload's stage only. A traced run times it
-  * untraced first, as the reference for the tracing overhead, then runs
-  * one traced iteration of both stages with listeners, the counting file
-  * system and spans. Outputs are written for the checks that run after
-  * the JVM ends.
+  * Both start with a JIT warm-up of the workload's stage. An untraced run
+  * then iterates that stage until `seconds` have passed, at least once. A
+  * traced run traces one iteration of the stage, with listeners, the
+  * counting file system and spans, between two untraced ones that are the
+  * reference for the tracing overhead, and then one of the other stage.
+  * Outputs are written for the checks that run after the JVM ends.
   */
 object Harness {
 
+  /** Session builds timed for set-up; the median is reported. */
+  val Setups = 7
+  /** Dates that land one per daily run after the backfill. */
+  val DailyRuns = 4
+
   final case class Opts(data: Path, work: Path, out: Path, seconds: Double,
-      traced: Boolean, stage: String, backfillDays: Int, minIters: Int,
-      mix: Seq[String], setups: Int)
+      traced: Boolean, stage: String, mix: Seq[String])
 
   private val Src = Report1SourceCols()
   private val Trg = Report1TargetCols()
@@ -52,11 +56,9 @@ object Harness {
   private def parse(args: Array[String]): Opts = {
     val m = args.grouped(2).collect { case Array(k, v) => k.stripPrefix("--") -> v }.toMap
     Opts(Paths.get(m("data")), Paths.get(m("work")), Paths.get(m("out")),
-      m("seconds").toDouble, m("trace") == "1", m("stage"), m("backfill-days").toInt,
-      m("min-iters").toInt,
+      m("seconds").toDouble, m("trace") == "1", m("stage"),
       Files.readAllLines(Paths.get(m("mix"))).asScala.map(_.trim)
-        .filter(l => l.nonEmpty && !l.startsWith("#")).toSeq,
-      m("setups").toInt)
+        .filter(l => l.nonEmpty && !l.startsWith("#")).toSeq)
   }
 
   def build(traced: Boolean): SparkSession = {
@@ -78,7 +80,7 @@ object Harness {
     // set-up: a fresh session, ready to answer, several times
     val setup = ArrayBuffer.empty[Double]
     var spark: SparkSession = null
-    for (_ <- 1 to o.setups) {
+    for (_ <- 1 to Setups) {
       if (spark != null) spark.stop()
       val t0 = System.nanoTime()
       spark = build(o.traced)
@@ -87,22 +89,29 @@ object Harness {
     }
     phase("setup done")
     val run = new Run(spark, o)
-    val stage: Int => Unit =
-      if (o.stage == "etl") run.etlIteration else run.mixIteration
-    // JIT warm-up of the timed stage; in a traced run the other stage is
-    // traced without one, so its layer figures include first-run costs
-    if (o.stage == "etl") run.etlWarmup() else run.mixWarmup()
+    val (warmup, stage, other): (Int => Unit, Int => Unit, Int => Unit) =
+      if (o.stage == "etl") (run.etlWarmup, run.etlIteration, run.mixIteration)
+      else (run.mixWarmup, run.mixIteration, run.etlIteration)
+    // JIT warm-up of the timed stage. A traced run warms up twice, so that
+    // the untraced iterations it compares the traced one with run on a
+    // steady JIT; the other stage is traced without a warm-up, so its layer
+    // figures include first-run costs.
+    for (i <- 0 until (if (o.traced) 2 else 1)) warmup(i)
     phase("warm-up done")
     val loop0 = System.nanoTime()
-    var i = 0
-    while (i < o.minIters || secs(loop0) < o.seconds) { stage(i); i += 1 }
     if (o.traced) {
-      // the iterations above are the untraced reference for the tracing
-      // overhead; the traced iteration covers every layer
-      run.setTraced(true)
-      run.etlIteration(i)
-      run.mixIteration(i)
-      run.setTraced(false)
+      // untraced iterations before and after the traced one, so that JIT
+      // warming during the run cancels out of the tracing overhead; the
+      // other stage is traced last, so that it does not warm the JIT
+      // between them
+      stage(0)
+      run.tracing(stage(1))
+      stage(2)
+      run.tracing { other(3); run.execLayers() }
+    } else {
+      stage(0)
+      var i = 1
+      while (secs(loop0) < o.seconds) { stage(i); i += 1 }
     }
     val loopS = secs(loop0)
     phase("loop done")
@@ -136,6 +145,7 @@ object Harness {
     private val xetra = o.data.resolve("xetra")
     private val dates: Seq[String] =
       Files.list(xetra).iterator.asScala.map(_.getFileName.toString).toSeq.sorted
+    private val backfillDays = dates.size - DailyRuns
 
     // end-to-end samples, split by whether the iteration was traced
     private val samples = mutable.Map.empty[(Boolean, String), ArrayBuffer[Double]]
@@ -275,9 +285,9 @@ object Harness {
     private def streamRun(job: Report1StreamJob, name: String): Option[Double] =
       op(name)(tracer.span("streaming.runOnce", "streaming")(job.runOnce()))
 
-    /** backfill + daily increments over fresh state under `root`. */
-    private def etl(root: Path, backfillDays: Int, lastDay: Int,
-        record: Boolean): Map[String, Any] = {
+    /** backfill + daily increments up to date `lastDay` over fresh state
+      * under `root`. */
+    private def etl(root: Path, lastDay: Int, record: Boolean): Map[String, Any] = {
       val src = Files.createDirectories(root.resolve("src"))
       val cfg = config(root)
       val streamOut = root.resolve("stream_out").toString
@@ -316,33 +326,32 @@ object Harness {
           layer(s"streaming.${n}_s", streamD.getOrElse(s"stream_${k}_ms", 0.0) / 1e3)
         layer("streaming.batches", streamD.getOrElse("stream_batches", 0.0))
         layer("streaming.input_rows", streamD.getOrElse("stream_input_rows", 0.0))
-        execLayers(Counters.delta(s2, s0), "exec_backfill")
+        execSum(Counters.delta(s2, s0))
       }
       Map("root" -> root.toString, "batch_runs" -> batchRuns, "stream_runs" -> streamRuns,
         "stream_out" -> streamOut, "meta" -> root.resolve("trg/meta/meta.csv").toString,
         "report_dir" -> root.resolve("trg/report1").toString)
     }
 
-    private val execSums = mutable.Map.empty[String, Double]
+    private val execSums = mutable.Map.empty[String, Double].withDefaultValue(0.0)
 
-    /** exec.* sums the backfill and the warm mix pass of one iteration. */
-    private def execLayers(d: Map[String, Double], part: String): Unit = {
+    private def execSum(d: Map[String, Double]): Unit =
       for (k <- Seq("exec_codegen_ms", "exec_rows_scanned", "exec_files_read",
           "exec_shuffle_bytes", "exec_shuffle_write_ns",
           "exec_agg_ms", "exec_spill_bytes", "exec_write_commit_ms"))
-        execSums(k) = execSums.getOrElse(k, 0.0) + d.getOrElse(k, 0.0)
-      if (part == "exec_mix") {
-        val g = execSums.withDefaultValue(0.0)
-        layer("exec.codegen_s", g("exec_codegen_ms") / 1e3)
-        layer("exec.rows_scanned", g("exec_rows_scanned"))
-        layer("exec.files_read", g("exec_files_read"))
-        layer("exec.shuffle_bytes", g("exec_shuffle_bytes"))
-        layer("exec.shuffle_write_s", g("exec_shuffle_write_ns") / 1e9)
-        layer("exec.agg_build_s", g("exec_agg_ms") / 1e3)
-        layer("exec.spill_bytes", g("exec_spill_bytes"))
-        layer("exec.write_commit_s", g("exec_write_commit_ms") / 1e3)
-        execSums.clear()
-      }
+        execSums(k) += d.getOrElse(k, 0.0)
+
+    /** exec.* sums the traced backfill and warm mix pass. */
+    def execLayers(): Unit = {
+      val g = execSums
+      layer("exec.codegen_s", g("exec_codegen_ms") / 1e3)
+      layer("exec.rows_scanned", g("exec_rows_scanned"))
+      layer("exec.files_read", g("exec_files_read"))
+      layer("exec.shuffle_bytes", g("exec_shuffle_bytes"))
+      layer("exec.shuffle_write_s", g("exec_shuffle_write_ns") / 1e9)
+      layer("exec.agg_build_s", g("exec_agg_ms") / 1e3)
+      layer("exec.spill_bytes", g("exec_spill_bytes"))
+      layer("exec.write_commit_s", g("exec_write_commit_ms") / 1e3)
     }
 
     /** One pass of the query mix in session `s`; each query is written in
@@ -351,16 +360,19 @@ object Harness {
       */
     private def mixPass(s: SparkSession, pass: String,
         sink: (DataFrame, String) => Unit): (Double, Seq[(String, DataFrame)]) = {
-      var total, construct, plan, execute = 0.0
+      var total, construct, plan, execute, eager = 0.0
       val frames = ArrayBuffer.empty[(String, DataFrame)]
       for (name <- o.mix) {
         val q = Registry.all(name)
         var df: DataFrame = null
         var tc, tp = 0.0
         val t = op(s"$pass:$name") {
+          val j0 = reading()
           val t0 = System.nanoTime()
           df = tracer.span("query.fn", "ops")(q.fn(s, tables))
           tc = secs(t0)
+          // actions that ran while the frame was built, before any write
+          if (pass == "cold" && traced) eager += delta(j0, "actions")
           if (traced) {
             val t1 = System.nanoTime()
             tracer.span("query.executedPlan", "plans")(df.queryExecution.executedPlan)
@@ -374,20 +386,34 @@ object Harness {
           frames += name -> df
         }
       }
-      if (pass == "cold") layer("query.construct_s", construct)
-      else { layer("query.plan_s", plan); layer("query.execute_s", execute) }
+      if (pass == "cold") {
+        layer("query.construct_s", construct)
+        layer("query.eager_jobs", eager)
+      } else {
+        layer("query.plan_s", plan)
+        layer("query.execute_s", execute)
+      }
       (total, frames.toSeq)
     }
 
     private val noop: (DataFrame, String) => Unit =
       (df, _) => df.write.format("noop").mode("overwrite").save()
 
-    private def parquetTo(dir: Path): (DataFrame, String) => Unit =
-      (df, name) => df.write.mode("overwrite").parquet(dir.resolve(name).toString)
-
     private val dumpDir = o.work.resolve("mix_dump")
 
-    private def mix(dumpWarm: Boolean): Unit = {
+    /** A sink that writes each result to parquet, for the checks. */
+    private def dumpTo(pass: String): (DataFrame, String) => Unit = (df, name) =>
+      try df.write.mode("overwrite").parquet(dumpDir.resolve(pass).resolve(name).toString)
+      catch { case e: Throwable => errors += s"dump $pass:$name: ${e.getMessage}".take(500) }
+
+    // whether memo-warm results were written for the checks
+    private var warmDumped = false
+
+    /** Releases every memo block, so the next session starts memo-cold. */
+    private def release(): Unit =
+      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+
+    private def mix(): Unit = {
       val s = spark.newSession()
       if (traced) probes.attach(s)
       val c0 = reading()
@@ -395,8 +421,6 @@ object Harness {
       val c1 = reading()
       if (traced) {
         val d = Counters.delta(c1, c0)
-        layer("query.eager_jobs", d.getOrElse("spark_jobs", 0.0) -
-          d.getOrElse("sql_executions", 0.0))
         layer("jvm.gc_s", d.getOrElse("jvm_gc_ms", 0.0) / 1e3)
         layer("jvm.codegen_compiles", d.getOrElse("jvm_codegen_compiles", 0.0))
         val (bytes, blocks) = probes.storage()
@@ -410,53 +434,58 @@ object Harness {
         for (p <- Seq("exchanges", "reused_exchanges", "existing_rdd_scans",
             "broadcast_joins", "sort_merge_joins"))
           layer(s"plan.$p", d.getOrElse(s"plan_$p", 0.0))
-        execLayers(d, "exec_mix")
+        execSum(d)
       }
       val (retained, _) = probes.storage()
       if (traced) probes.detach(s)
       sample("query_mix_cold_s", cold)
       sample("query_mix_retained_mb", retained / 1e6)
-      // memo-warm results, for the check against the memo-cold ones
-      if (dumpWarm) frames.foreach { case (n, df) => dump(df, n, "warm") }
-      // release this session's memo blocks before the next iteration
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+      // without a mix warm-up, the memo-warm results of this pass are the
+      // ones checked
+      if (!warmDumped) frames.foreach { case (n, df) => dumpTo("warm")(df, n) }
+      warmDumped = true
+      release()
     }
 
-    private def dump(df: DataFrame, name: String, pass: String): Unit =
-      try parquetTo(dumpDir.resolve(pass))(df, name)
-      catch { case e: Throwable => errors += s"dump $pass:$name: ${e.getMessage}".take(500) }
-
-    def setTraced(on: Boolean): Unit = {
-      traced = on
-      tracer.enabled = on
-      if (on) probes.enable() else probes.disable()
+    /** Runs `body` with spans, listeners and probes on. */
+    def tracing(body: => Unit): Unit = {
+      def set(on: Boolean): Unit = {
+        traced = on
+        tracer.enabled = on
+        if (on) probes.enable() else probes.disable()
+      }
+      set(true)
+      try body finally set(false)
     }
 
-    /** JIT warm-up of the jobs on throw-away state: the whole backfill; a
-      * shorter one leaves the first timed backfill paying for compilation.
+    /** JIT warm-up of the jobs on throw-away state: the whole backfill,
+      * then one daily run. A second backfill after it runs within a few
+      * percent of a third; the first daily run after a backfill is slow
+      * in the warm-up as well, so that is the program's cost, not the JIT's.
       */
-    def etlWarmup(): Unit =
-      etl(o.work.resolve("warmup"), o.backfillDays, o.backfillDays, record = false)
+    def etlWarmup(i: Int): Unit =
+      etl(o.work.resolve(s"warmup$i"), backfillDays + 1, record = false)
 
-    /** JIT warm-up of the mix in a throw-away session. The mix runs
-      * memo-cold there, so its results are kept as the memo-cold side of
-      * the cold/warm check.
+    /** JIT warm-up of the mix in throw-away sessions: a memo-cold pass,
+      * then a memo-cold and a memo-warm pass in a second session; a
+      * second memo-cold pass is still ~25% slower than a third. The
+      * results of the first pass and of the memo-warm one are written for
+      * the cold/warm and oracle checks.
       */
-    def mixWarmup(): Unit = {
+    def mixWarmup(i: Int): Unit = {
+      mixPass(spark.newSession(), "warmup", dumpTo("cold"))
+      release()
       val s = spark.newSession()
-      mixPass(s, "warmup", (df, name) => dump(df, name, "cold"))
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+      mixPass(s, "warmup", noop)
+      mixPass(s, "warmup", dumpTo("warm"))
+      warmDumped = true
+      release()
     }
 
     def etlIteration(i: Int): Unit =
-      iterations += etl(o.work.resolve(s"it$i"), o.backfillDays, dates.size, record = true)
+      iterations += etl(o.work.resolve(s"it$i"), dates.size, record = true)
 
-    private var warmDumped = false
-
-    def mixIteration(i: Int): Unit = {
-      mix(dumpWarm = !warmDumped)
-      warmDumped = true
-    }
+    def mixIteration(i: Int): Unit = mix()
 
     def resultJson(setup: Seq[Double], loopS: Double): String = {
       val oracles = o.mix.flatMap(n => Registry.all(n).oracle.map(n -> _)).toMap
@@ -472,7 +501,6 @@ object Harness {
         "attempted" -> attempted,
         "errors" -> errors.toSeq,
         "dates" -> dates,
-        "backfill_days" -> o.backfillDays,
         "iterations" -> iterations.toSeq,
         "mix" -> (if (warmDumped) o.mix else Seq.empty),
         "mix_dump" -> dumpDir.toString,

@@ -7,11 +7,12 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileStatus, LocalFileSystem, LocatedFileStatus, Path, RemoteIterator}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{QueryExecution, SQLExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -31,9 +32,23 @@ object Counters {
     after.map { case (k, v) => k -> (v - before.getOrElse(k, 0.0)) }
 }
 
-/** Spark job and task counts. */
+/** Spark job and task counts, and actions: root SQL executions plus jobs
+  * started outside any SQL execution. The jobs AQE starts for the stages
+  * of one execution count as one action.
+  */
 final class EngineListener(c: Counters) extends SparkListener {
-  override def onJobStart(e: SparkListenerJobStart): Unit = c.add("spark_jobs", 1)
+  override def onJobStart(e: SparkListenerJobStart): Unit = {
+    c.add("spark_jobs", 1)
+    if (e.properties == null || e.properties.getProperty(SQLExecution.EXECUTION_ID_KEY) == null)
+      c.add("actions", 1)
+  }
+
+  override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+    // an execution nested in another (a command's inner query) is part of it
+    case s: SparkListenerSQLExecutionStart if s.rootExecutionId.forall(_ == s.executionId) =>
+      c.add("actions", 1)
+    case _ =>
+  }
 
   override def onTaskEnd(e: SparkListenerTaskEnd): Unit = c.add("spark_tasks", 1)
 }
@@ -44,7 +59,6 @@ final class EngineListener(c: Counters) extends SparkListener {
   */
 final class PlanListener(c: Counters) extends QueryExecutionListener {
   override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
-    c.add("sql_executions", 1)
     c.add("sql_ns", durationNs.toDouble)
     PlanFacts.walk(qe.executedPlan, c)
   }

@@ -43,17 +43,14 @@ HARNESS = os.path.join(HERE, "harness")
 # checks within the 180 s a run may take
 RUN_LIMIT_S = 160
 
-# stage: what the untraced loop times; min_iters: iterations it runs at
-# least, whatever --seconds says, so that every run takes the same samples.
-WORKLOADS = {
-    "etl": dict(stage="etl", min_iters=1),
-    "query_mix": dict(stage="mix", min_iters=2),
-}
+# workload -> the harness stage it times
+WORKLOADS = {"etl": "etl", "query_mix": "mix"}
 # The inputs, the same for both workloads: DAYS dates of 24 hourly CSV
-# files with REPLICAS copies of each instrument; the cold backfill covers
-# BACKFILL_DAYS dates and the rest land one per daily run. The size keeps
-# an untraced run under a minute on 4 cores.
-DAYS, REPLICAS, BACKFILL_DAYS = 15, 8, 11
+# files, from EVENTS_PER_DAY events a day (the rate of the sf0.1 events
+# table) with REPLICAS copies of each instrument; the harness backfills all
+# dates but the last four, which land one per daily run. The star-schema
+# tables of the query mix are at SF.
+DAYS, REPLICAS, EVENTS_PER_DAY, SF = 15, 8, 3340, 0.01
 # per stage: the samples behind the cold_s and warm_s end-to-end metrics
 COLD_WARM = {"etl": ("etl_cold_s", "etl_warm_s"),
              "mix": ("query_mix_cold_s", "query_mix_warm_s")}
@@ -156,25 +153,14 @@ def run_harness(cp, args, run_dir, deadline):
 
 
 def declared_metrics(trace):
-    """Metric names BENCHMARK.json declares for this mode, if it is there."""
-    path = os.path.join(ROOT, "BENCHMARK.json")
-    if not os.path.exists(path):
-        return None
-    with open(path) as f:
+    """Name -> unit of the metrics BENCHMARK.json declares for this mode."""
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         spec = json.load(f)
-    return {m["name"] for m in spec["per_layer" if trace else "end_to_end"]}
+    return {m["name"]: m["unit"] for m in spec["per_layer" if trace else "end_to_end"]}
 
 
 def median(xs):
     return statistics.median(xs) if xs else None
-
-
-def unit_of(name):
-    if name.endswith("_s"):
-        return "s"
-    if name.endswith("_mb"):
-        return "MB"
-    return "bytes" if "bytes" in name else "count"
 
 
 def main():
@@ -188,7 +174,8 @@ def main():
     if not os.path.isfile(os.path.join(ROOT, "build.sbt")) or \
             not os.path.isdir(os.path.join(ROOT, "src", "main")):
         raise SystemExit("no program source here: run from the repository root")
-    shape = WORKLOADS[a.workload]
+    stage = WORKLOADS[a.workload]
+    units = declared_metrics(a.trace)
     cp = build()
     # the build may take long on the first run; the run limit starts now
     deadline = time.time() + RUN_LIMIT_S
@@ -196,16 +183,14 @@ def main():
     shutil.rmtree(run_dir, ignore_errors=True)
     try:
         data = os.path.join(run_dir, "data")
-        manifest = gen.generate(a.seed, data, days=DAYS, replicas=REPLICAS)
+        manifest = gen.generate(a.seed, data, days=DAYS, replicas=REPLICAS, sf=SF,
+                                events_per_day=EVENTS_PER_DAY)
         t_gen = time.time()
         out = os.path.join(run_dir, "result.json")
         run_harness(cp, ["--data", data, "--work", os.path.join(run_dir, "work"),
                          "--out", out, "--seconds", str(a.seconds),
-                         "--trace", str(a.trace), "--stage", shape["stage"],
-                         "--backfill-days", str(BACKFILL_DAYS),
-                         "--min-iters", str(shape["min_iters"]),
-                         "--mix", os.path.join(HERE, "mix.txt"),
-                         "--setups", "3"],
+                         "--trace", str(a.trace), "--stage", stage,
+                         "--mix", os.path.join(HERE, "mix.txt")],
                     run_dir, deadline)
         t_harness = time.time()
         with open(out) as f:
@@ -230,39 +215,36 @@ def main():
             failed += 1 if f else 0
         # each checked iteration and the mix check count as one operation
         attempted = res["attempted"] + len(checked)
-        cold, warm = COLD_WARM[shape["stage"]]
-        metrics = {}
+        cold, warm = COLD_WARM[stage]
+        values = {}
         if a.trace:
             for k, vs in res["layers"].items():
-                metrics[k] = {"value": median(vs), "unit": unit_of(k)}
+                values[k] = median(vs)
             for layer, v in res["layer_self_s"].items():
-                metrics[f"self.{layer}_s"] = {"value": v, "unit": "s"}
+                values[f"self.{layer}_s"] = v
             for k, name in SPLITS.items():
                 vs = res["traced_samples"].get(k)
                 if vs:
-                    metrics[name] = {"value": median(vs), "unit": unit_of(name)}
+                    values[name] = median(vs)
+            # the untraced samples come from iterations before and after
+            # the traced one
             for k, name in ((cold, "cold_s"), (warm, "warm_s")):
                 on = median(res["traced_samples"].get(k, []))
                 off = median(res["samples"].get(k, []))
                 if on is not None and off:
-                    metrics[f"trace.overhead.{name}"] = {"value": on / off - 1,
-                                                         "unit": "ratio"}
+                    values[f"trace.overhead.{name}"] = on / off - 1
         else:
-            metrics["setup_s"] = {"value": median(res["setup_s"]), "unit": "s"}
+            values["setup_s"] = median(res["setup_s"])
             for k, name in ((cold, "cold_s"), (warm, "warm_s")):
                 v = median(res["samples"].get(k, []))
-                if v is None:
-                    continue  # reported as not measured below
-                metrics[name] = {"value": v, "unit": "s"}
-        declared = declared_metrics(a.trace)
-        if declared is not None:
-            undeclared = sorted(set(metrics) - declared)
-            missing = sorted(declared - set(metrics))
-            fails += [f"metric {k} was not measured" for k in missing]
-            fails += [f"metric {k} is not declared in BENCHMARK.json" for k in undeclared]
-            for k in undeclared:
-                del metrics[k]
-            failed += 1 if missing or undeclared else 0
+                if v is not None:  # else reported as not measured below
+                    values[name] = v
+        undeclared = sorted(set(values) - set(units))
+        missing = sorted(set(units) - set(values))
+        fails += [f"metric {k} was not measured" for k in missing]
+        fails += [f"metric {k} is not declared in BENCHMARK.json" for k in undeclared]
+        failed += 1 if missing or undeclared else 0
+        metrics = {k: {"value": values[k], "unit": u} for k, u in units.items() if k in values}
         counts = {k: len(v) for k, v in res["samples"].items()}
         log(f"workload={a.workload} seed={a.seed} loop_s={res['loop_s']:.1f} "
             f"samples={counts} csv_rows={manifest['csv_rows']} "
