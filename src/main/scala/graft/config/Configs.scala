@@ -45,30 +45,35 @@ final case class LoggingConfig(rootLevel: Option[String],
 final case class JobConfig(source: SourceConfig, target: TargetConfig,
     meta: MetaConfig, logging: Option[LoggingConfig] = None)
 
-/** Minimal YAML-subset loader for the flat two-level config shape the
-  * reference uses (sections → scalar or inline-list values). No external
-  * YAML dependency exists in this build (zero-egress, Spark jars only), and
-  * the config grammar genuinely needed is this small. The one nested
-  * section, the reference's `logging:` dictConfig, gets a dedicated scan
-  * ([[Configs.parseLogging]]) and is applied to log4j2 by [[LogSetup]].
+/** Minimal YAML-subset loader for the reference's config shape: sections
+  * of scalar or inline-list values, plus the nested `logging:` dictConfig
+  * section. No external YAML dependency exists in this build (zero-egress,
+  * Spark jars only), and the config grammar genuinely needed is this small.
+  * One indentation-aware [[scan]] of the text serves both readers: the
+  * two-level `source`/`target`/`meta` keys, and the logging section's root
+  * level and formatter pattern ([[Configs.parseLogging]]), which
+  * [[LogSetup]] applies to log4j2.
   */
 object Configs {
 
+  private type Value = Either[String, Seq[String]]
+
   def load(path: String): JobConfig = {
-    val text = Source.fromFile(path, "UTF-8").mkString
-    val sections = parse(text)
-    val s = sections.getOrElse("source",
-      sys.error("config: missing 'source' section"))
-    val t = sections.getOrElse("target",
-      sys.error("config: missing 'target' section"))
-    val m = sections.getOrElse("meta",
-      sys.error("config: missing 'meta' section"))
-    def one(sec: Map[String, Either[String, Seq[String]]], k: String): String =
+    val entries = scan(Source.fromFile(path, "UTF-8").mkString)
+    val sections = entries
+      .collect { case Entry(List(sec), k, v) => (sec, k, value(v)) }
+      .groupBy(_._1).map { case (sec, kvs) => sec -> kvs.map(e => e._2 -> e._3).toMap }
+    def section(name: String): Map[String, Value] =
+      sections.getOrElse(name, sys.error(s"config: missing '$name' section"))
+    val s = section("source")
+    val t = section("target")
+    val m = section("meta")
+    def one(sec: Map[String, Value], k: String): String =
       sec.getOrElse(k, sys.error(s"config: missing key '$k'")) match {
         case Left(v) => v
         case Right(_) => sys.error(s"config: key '$k' should be scalar")
       }
-    def list(sec: Map[String, Either[String, Seq[String]]], k: String): Seq[String] =
+    def list(sec: Map[String, Value], k: String): Seq[String] =
       sec.getOrElse(k, sys.error(s"config: missing key '$k'")) match {
         case Right(v) => v
         case Left(_) => sys.error(s"config: key '$k' should be a list")
@@ -104,80 +109,58 @@ object Configs {
         colDailyTradedVol = one(t, "trg_col_dail_trad_vol"),
         colChPrevClos = one(t, "trg_col_ch_prev_clos")),
       MetaConfig(metaUri = one(m, "meta_uri")),
-      logging = parseLogging(text))
+      logging = logging(entries))
   }
 
-  /** Extract root level + formatter pattern from a nested `logging:`
-    * dictConfig section. The main [[parse]] grammar is deliberately
-    * two-level; this is a targeted indentation-aware scan of just the
-    * `logging:` block, so `level:` keys inside handler definitions are NOT
-    * confused with `root: → level:` (dictConfig semantics: the root level
-    * is what gates emission; handler levels only filter further).
+  /** Root level + formatter pattern of the nested `logging:` dictConfig
+    * section. The enclosing block keys tell `root: → level:` apart from the
+    * `level:` keys inside handler definitions (dictConfig semantics: the
+    * root level is what gates emission; handler levels only filter
+    * further).
     */
-  private[graft] def parseLogging(text: String): Option[LoggingConfig] = {
-    var inLogging = false
-    var path = List.empty[(Int, String)] // (indent, blockKey), innermost first
-    var rootLevel: Option[String] = None
-    var pattern: Option[String] = None
-    for (raw <- text.linesIterator) {
-      val line = stripComment(raw).replaceAll("\\s+$", "")
-      if (line.trim.nonEmpty) {
-        val indent = line.takeWhile(_ == ' ').length
-        if (indent == 0) {
-          inLogging = line == "logging:"
-          path = Nil
-        } else if (inLogging && line.contains(":")) {
-          val Array(k, v) = line.split(":", 2)
-          val key = k.trim
-          val value = v.trim
-          path = path.dropWhile(_._1 >= indent)
-          if (value.isEmpty) path = (indent, key) :: path
-          else {
-            val parents = path.map(_._2)
-            if (key == "level" && parents.headOption.contains("root"))
-              rootLevel = Some(unquote(value))
-            if (key == "format" && parents.contains("formatters"))
-              pattern = Some(unquote(value))
-          }
-        }
-      }
-    }
+  private[graft] def parseLogging(text: String): Option[LoggingConfig] =
+    logging(scan(text))
+
+  private def logging(entries: Seq[Entry]): Option[LoggingConfig] = {
+    def last(p: Entry => Boolean): Option[String] =
+      entries.filter(e => e.path.headOption.contains("logging") && p(e))
+        .lastOption.map(e => unquote(e.value))
+    val rootLevel = last(e => e.key == "level" && e.path.last == "root")
+    val pattern = last(e => e.key == "format" && e.path.contains("formatters"))
     if (rootLevel.isEmpty && pattern.isEmpty) None
     else Some(LoggingConfig(rootLevel, pattern))
   }
 
-  /** section → key → scalar | list. Inline lists only (`[a, b, c]`);
-    * comments and blank lines skipped; quotes stripped.
+  /** One `key: value` line under the block keys that enclose it,
+    * outermost first.
     */
-  private[config] def parse(text: String)
-      : Map[String, Map[String, Either[String, Seq[String]]]] = {
-    var section: String = null
-    val out = scala.collection.mutable.Map
-      .empty[String, scala.collection.mutable.Map[String, Either[String, Seq[String]]]]
+  private final case class Entry(path: List[String], key: String, value: String)
+
+  /** The one scan of the text: comments and blank lines skipped, a bare
+    * `key:` opens a block, and every `key: value` line becomes an [[Entry]].
+    */
+  private def scan(text: String): Seq[Entry] = {
+    var blocks = List.empty[(Int, String)] // (indent, key), innermost first
+    val out = Seq.newBuilder[Entry]
     for (raw <- text.linesIterator) {
-      val noComment = stripComment(raw)
-      val line = noComment.replaceAll("\\s+$", "")
-      if (line.trim.nonEmpty) {
-        if (!line.startsWith(" ") && line.endsWith(":")) {
-          section = line.dropRight(1).trim
-          out.getOrElseUpdate(section,
-            scala.collection.mutable.Map.empty)
-        } else if (line.startsWith(" ") && section != null && line.contains(":")) {
-          val Array(k, v) = line.split(":", 2)
-          val key = k.trim
-          val value = v.trim
-          if (value.startsWith("[") && value.endsWith("]")) {
-            val items = value.substring(1, value.length - 1).split(",")
-              .map(i => unquote(i.trim)).filter(_.nonEmpty).toSeq
-            out(section)(key) = Right(items)
-          } else if (value.nonEmpty) {
-            out(section)(key) = Left(unquote(value))
-          } // bare "key:" with nested block → ignored (unsupported depth)
-        }
+      val line = stripComment(raw).replaceAll("\\s+$", "")
+      if (line.contains(":")) {
+        val indent = line.takeWhile(_ == ' ').length
+        val Array(k, v) = line.split(":", 2)
+        blocks = blocks.dropWhile(_._1 >= indent)
+        if (v.trim.isEmpty) blocks = (indent, k.trim) :: blocks
+        else out += Entry(blocks.reverse.map(_._2), k.trim, v.trim)
       }
     }
-    out.map { case (k, v) => k -> v.toMap }.toMap
+    out.result()
   }
+
+  /** Scalar or inline list (`[a, b, c]`); quotes stripped. */
+  private def value(v: String): Value =
+    if (v.startsWith("[") && v.endsWith("]"))
+      Right(v.substring(1, v.length - 1).split(",")
+        .map(i => unquote(i.trim)).filter(_.nonEmpty).toSeq)
+    else Left(unquote(v))
 
   /** Strip a trailing comment, respecting quotes. */
   private def stripComment(line: String): String = {

@@ -1,7 +1,7 @@
 package graft.io
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** Unknown sink format — reference `WrongFormatException`
@@ -34,9 +34,9 @@ final class Connector(spark: SparkSession, baseUri: String) {
     base.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Object keys under a prefix — reference `list_files_in_prefix`
-    * (`s3.py:52-63`). Drives partition pruning: only pending dates' prefixes
-    * are ever listed or read (the reference's one real optimization,
-    * SURVEY.md §4.1).
+    * (`s3.py:52-63`). Not on the job's read path: [[graft.jobs.Report1Job]]
+    * hands whole date prefixes to [[readCsv]] and Spark's file index does
+    * the one listing; this stays for callers that need the key names.
     */
   def listPrefix(prefix: String): Seq[String] = {
     val p = new Path(base, prefix)
@@ -50,20 +50,28 @@ final class Connector(spark: SparkSession, baseUri: String) {
     out.toSeq.sorted
   }
 
-  /** Multi-file CSV scan with an explicit schema (no inference pass — two
-    * scans of 100 TB to guess types is wrong; the reference's pandas
-    * inference is replaced by declared types, SURVEY.md §4.4.3). Zero paths
-    * → typed empty relation (reference S4 fallback, improved: schema kept).
+  /** Full URIs of the keys that exist under the base, in order; a
+    * getFileStatus per key, no listing.
     */
-  def readCsv(paths: Seq[String], schema: StructType,
-      header: Boolean = true, sep: String = ","): DataFrame =
+  def existing(keys: Seq[String]): Seq[String] =
+    keys.map(new Path(base, _)).filter(fs.exists).map(_.toString)
+
+  /** Multi-path CSV scan with an explicit schema (no inference pass — two
+    * scans of 100 TB to guess types is wrong; the reference's pandas
+    * inference is replaced by declared types, SURVEY.md §4.4.3). A path may
+    * be a file or a prefix; a prefix is read recursively and Spark's file
+    * index lists it, skipping hidden and `_`-marker files such as
+    * `_SUCCESS`. Zero paths → typed empty relation (reference S4 fallback,
+    * improved: schema kept).
+    */
+  def readCsv(paths: Seq[String], schema: StructType): DataFrame =
     if (paths.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     else
       spark.read
         .schema(schema)
-        .option("header", header.toString)
-        .option("sep", sep)
+        .option("header", "true")
+        .option("recursiveFileLookup", "true")
         .csv(paths: _*)
 
   /** Format-dispatched write — reference `write_df_to_s3` (`s3.py:85-107`):
@@ -72,29 +80,16 @@ final class Connector(spark: SparkSession, baseUri: String) {
     * correct shape at scale (documented deviation; `coalesce(1)` exists only
     * in the verify harness).
     */
-  def write(df: DataFrame, key: String, format: String): Boolean = {
-    val target = new Path(base, key).toString
+  def write(df: DataFrame, key: String, format: String): Boolean =
     format match {
       case "csv" | "parquet" =>
-        // the S4 emptiness probe would otherwise execute the full upstream
-        // plan twice (once to find a first row, once to save) - persist so
-        // the probe's work is reused by the write
-        val cached = df.persist()
-        try {
-          if (cached.isEmpty) {
-            log.info("empty frame - no file written to {}", target)
-            false
-          } else {
-            log.info("writing {} to {}", format: Any, target: Any)
-            val w = cached.write.mode("overwrite")
-            (if (format == "csv") w.option("header", "true") else w)
-              .format(format).save(target)
-            true
-          }
-        } finally cached.unpersist()
+        writeNonEmpty(df, key) { (w, target) =>
+          log.info("writing {} to {}", format: Any, target: Any)
+          (if (format == "csv") w.option("header", "true") else w)
+            .format(format).save(target)
+        }
       case other => throw new UnsupportedFormatException(other)
     }
-  }
 
   /** Partitioned parquet writer with DYNAMIC partition overwrite — the
     * 100 TB target layout (SURVEY.md §7.4.7): a re-run of one day replaces
@@ -105,21 +100,30 @@ final class Connector(spark: SparkSession, baseUri: String) {
     * the option scopes the overwrite to partitions present in `df`.
     */
   def writePartitioned(df: DataFrame, key: String,
-      partitionCols: Seq[String]): Boolean = {
+      partitionCols: Seq[String]): Boolean =
+    writeNonEmpty(df, key) { (w, target) =>
+      log.info("writing dynamic partitions {} to {}",
+        partitionCols.mkString(","), target: Any)
+      w.option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partitionCols: _*)
+        .parquet(target)
+    }
+
+  /** The one place the S4 empty skip happens: an empty frame writes
+    * nothing and returns false. The frame is persisted so the emptiness
+    * probe's work is reused by the save instead of running the upstream
+    * plan twice.
+    */
+  private def writeNonEmpty(df: DataFrame, key: String)(
+      save: (DataFrameWriter[Row], String) => Unit): Boolean = {
     val target = new Path(base, key).toString
     val cached = df.persist()
     try {
       if (cached.isEmpty) {
-        log.info("empty frame - no partitions written to {}", target)
+        log.info("empty frame - no file written to {}", target)
         false
       } else {
-        log.info("writing dynamic partitions {} to {}",
-          partitionCols.mkString(","), target: Any)
-        cached.write
-          .mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy(partitionCols: _*)
-          .parquet(target)
+        save(cached.write.mode("overwrite"), target)
         true
       }
     } finally cached.unpersist()

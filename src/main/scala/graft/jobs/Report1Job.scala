@@ -14,15 +14,19 @@ import org.apache.spark.sql.types._
   * (`xetra/transformers/xetra_transformer.py:234-244`) as
   * extract → transform → load over lazy DataFrames:
   *
-  *  - extract: watermark resolves pending dates (MetaStore), the connector
-  *    lists exactly those date prefixes (driver-side partition pruning — the
-  *    reference's one manual optimization, SURVEY.md §4.1) and issues ONE
-  *    multi-path CSV scan with a declared schema. The per-file loop +
+  *  - extract: watermark resolves pending dates (MetaStore); the pending
+  *    date prefixes that exist (Xetra has none on weekends) go to ONE
+  *    multi-path CSV scan with a declared schema — partition pruning, the
+  *    reference's one manual optimization (SURVEY.md §4.1). Spark's file
+  *    index lists those prefixes, once, on the driver while there are at
+  *    most 32 of them; the job lists no file itself. The per-file loop +
   *    concat of the reference collapses into Spark's native file splits.
-  *  - transform: [[Report1.transform]] (the whole C2 chain, Catalyst-fused).
-  *  - load: timestamped target key + format-dispatched write, then the
-  *    watermark commit — same ordering (write before commit) as the
-  *    reference, so a crash between the two reprocesses rather than loses.
+  *  - transform: [[Report1.transform]] (the whole C2 chain, Catalyst-fused,
+  *    lazy: building it runs no Spark job).
+  *  - load: timestamped target key + format-dispatched write, where the
+  *    connector skips an empty report (S4), then the watermark commit —
+  *    same ordering (write before commit) as the reference, so a crash
+  *    between the two reprocesses rather than loses.
   */
 final class Report1Job(spark: SparkSession, cfg: JobConfig, clock: Clock) {
 
@@ -58,8 +62,7 @@ final class Report1Job(spark: SparkSession, cfg: JobConfig, clock: Clock) {
 
   def extract(): DataFrame = {
     logger.info("Extracting source files started...")
-    val files = extractDates.flatMap(connector.listPrefix)
-    val bars = connector.readCsv(files, schema)
+    val bars = connector.readCsv(connector.existing(extractDates), schema)
     logger.info("Extracting source files finished.")
     bars
   }

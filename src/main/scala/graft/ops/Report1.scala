@@ -60,6 +60,9 @@ final case class Report1TargetCols(
 object Report1 {
 
   /** Pure transform: apply to any DataFrame holding the source schema.
+    * Lazy — building the report runs no Spark job. Empty input needs no
+    * guard (reference S4: `xetra_transformer.py:136-140`): the chain yields
+    * an empty report with the full output schema, and the writer skips it.
     *
     * @param extractDate ISO `yyyy-MM-dd`; rows strictly before it are read
     *                    only to feed the lag (W3) and dropped at the end (P3).
@@ -69,8 +72,6 @@ object Report1 {
       src: Report1SourceCols = Report1SourceCols(),
       trg: Report1TargetCols = Report1TargetCols(),
       extractDate: String): DataFrame = {
-    if (bars.isEmpty) return emptyReport(bars, src, trg)
-
     // W1/W2: group-constant first/last StartPrice by Time over (isin, date).
     // Explicit full frame — see scaladoc above.
     val grp = Window
@@ -110,26 +111,6 @@ object Report1 {
     }.toIndexedSeq: _*)
 
     rounded.filter(col(src.date) >= lit(extractDate))          // P3 string cmp
-  }
-
-  /** Empty-input guard (reference S4: `xetra_transformer.py:136-140`) —
-    * unlike the reference's schemaless `pd.DataFrame()`, we keep the output
-    * schema so downstream writers stay type-stable.
-    */
-  private def emptyReport(
-      bars: DataFrame, src: Report1SourceCols, trg: Report1TargetCols): DataFrame = {
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField(src.isin, StringType),
-      StructField(src.date, StringType),
-      StructField(trg.openingPrice, DoubleType),
-      StructField(trg.closingPrice, DoubleType),
-      StructField(trg.minPrice, DoubleType),
-      StructField(trg.maxPrice, DoubleType),
-      StructField(trg.dailyTradedVolume, LongType),
-      StructField(trg.changePrevClosing, DoubleType)))
-    bars.sparkSession.createDataFrame(
-      bars.sparkSession.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
   }
 
   /** Percent change vs the lagged value. Null when the previous value is 0

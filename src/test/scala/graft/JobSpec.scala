@@ -42,10 +42,11 @@ class JobSpec extends SparkSpec {
         header + "\n" + rows.map(_._3).mkString("\n") + "\n")
     }
 
-  private def configFile(root: Path): Path = {
+  private def configFile(root: Path,
+      layoutSrc: Path => Unit = layout): Path = {
     val src = root.resolve("src"); val trg = root.resolve("trg")
     Files.createDirectories(src); Files.createDirectories(trg)
-    layout(src)
+    layoutSrc(src)
     val yaml =
       s"""source:
          |  src_uri: '${src.toUri}'
@@ -112,6 +113,44 @@ class JobSpec extends SparkSpec {
     job2.run()
     assert(Files.list(outDir).toArray.length == written.length,
       "no-op run must not write a new report")
+  }
+
+  test("extract hands Spark the existing date prefixes: no job, markers skipped") {
+    // Friday and Monday, 24 hourly files each (48 paths, above Spark's
+    // 32-path parallel-listing threshold); the weekend between has no
+    // prefix. Monday's last hour sits one level deeper, and a `_SUCCESS`
+    // marker holding a row must not be read as data.
+    def hourly(src: Path): Unit =
+      for ((date, base) <- Seq("2021-04-16" -> 10, "2021-04-19" -> 20);
+           h <- 0 until 24) {
+        val hh = f"$h%02d"
+        val dir =
+          if (date == "2021-04-19" && h == 23) src.resolve(date).resolve("late")
+          else src.resolve(date)
+        Files.createDirectories(dir)
+        val p = base + h
+        Files.writeString(dir.resolve(s"${date}_BINS_XETR$hh.csv"),
+          s"$header\nAT1,SANT,$date,$hh:00,$p,$p,${p - 1},${p + 1},100\n")
+      }
+    val root = Files.createTempDirectory("graftjob_hourly")
+    val cfg = Configs.load(configFile(root, src => {
+      hourly(src)
+      Files.writeString(src.resolve("2021-04-19").resolve("_SUCCESS"),
+        s"$header\nAT1,SANT,2021-04-19,23:59,999,999,0.5,999,7\n")
+    }).toString)
+    val job = new Report1Job(spark, cfg, clock)
+    assert(job.extractDates ==
+      Seq("2021-04-16", "2021-04-17", "2021-04-18", "2021-04-19"))
+    var bars: org.apache.spark.sql.DataFrame = null
+    assert(sparkJobsStartedBy { bars = job.extract() } == 0)
+    assert(bars.count() == 48)
+
+    job.run()
+    val outDir = root.resolve("trg").resolve("report1")
+    val report = spark.read.parquet(Files.list(outDir).toArray.head.toString)
+      .collect().toSeq.map(_.toSeq)
+    assert(report ==
+      Seq(Seq("AT1", "2021-04-19", 20.0, 43.0, 19.0, 44.0, 2400L, 100.0)))
   }
 
   test("connector rejects unknown formats with a typed exception") {

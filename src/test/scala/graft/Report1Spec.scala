@@ -56,7 +56,23 @@ class Report1Spec extends SparkSpec {
   test("empty input yields empty report with full schema") {
     val out = Report1.transform(fixture.limit(0), extractDate = "2021-04-17")
     assert(out.isEmpty)
-    assert(out.columns.length == 8)
+    assert(out.schema.fields.map(f => f.name -> f.dataType.simpleString).toSeq ==
+      Seq("ISIN" -> "string", "Date" -> "string", "opening_price_eur" -> "double",
+        "closing_price_eur" -> "double", "minimum_price_eur" -> "double",
+        "maximum_price_eur" -> "double", "daily_traded_volume" -> "bigint",
+        "change_prev_closing_%" -> "double"))
+  }
+
+  test("building the report starts no Spark job") {
+    // a shuffled input: unlike a local relation, probing it for rows would
+    // need a job
+    val bars = fixture.repartition(2)
+    var out: org.apache.spark.sql.DataFrame = null
+    assert(sparkJobsStartedBy {
+      out = Report1.transform(bars, extractDate = "2021-04-17")
+    } == 0)
+    assert(out.orderBy("ISIN", "Date").collect().toSeq.map(_.toSeq) ==
+      golden.map(_.toSeq))
   }
 
   test("rows with any null are dropped before aggregation") {

@@ -28,4 +28,36 @@ trait SparkSpec extends AnyFunSuite {
   }
   /** sf0.001 testdata dir (driver-generated; TESTDATA.md). */
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Spark jobs started while `body` runs. A marker job before and after
+    * the body fences the count: the listener bus delivers events in order,
+    * so once the closing marker's start event arrives, every job the body
+    * started has been seen, and nothing from earlier tests is counted.
+    */
+  def sparkJobsStartedBy(body: => Any): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val starts = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        starts.put(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    def marker(name: String): Unit = {
+      sc.setJobDescription(name)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("jobs-fence-open")
+      body
+      marker("jobs-fence-close")
+      val seen = Iterator.continually(
+        Option(starts.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+          .getOrElse(fail("listener bus did not deliver the fence job")))
+        .takeWhile(_ != "jobs-fence-close").toSeq
+      seen.dropWhile(_ != "jobs-fence-open").size - 1
+    } finally sc.removeSparkListener(listener)
+  }
 }
