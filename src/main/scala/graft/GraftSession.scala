@@ -47,6 +47,15 @@ object GraftSession {
       // keeps reducer partitions near the 64 MB advisory size.
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
         (shufflePartitions * 8).toString)
+      // Above 32 paths (parallelPartitionDiscovery.threshold) Spark lists
+      // files in a parallel job of min(paths, this) tasks — by default one
+      // task per path. The streaming file source lists every micro-batch's
+      // files that way, and again for the last committed batch when a
+      // query restarts: 264 one-file tasks to re-list an 11-day backfill on
+      // the first daily run. Cap a listing job at one task per core; on a
+      // cluster it still lists in parallel.
+      .config("spark.sql.sources.parallelPartitionDiscovery.parallelism",
+        shufflePartitions.toString)
       // Runtime semi-reduction (InjectRuntimeFilter): Spark 4 enables the
       // rule by default but its thresholds are cluster-sized — the probe
       // side must scan >10 GiB and the build side estimate <10 MiB, so at

@@ -110,22 +110,29 @@ final class Connector(spark: SparkSession, baseUri: String) {
     }
 
   /** The one place the S4 empty skip happens: an empty frame writes
-    * nothing and returns false. The frame is persisted so the emptiness
-    * probe's work is reused by the save instead of running the upstream
-    * plan twice.
+    * nothing, overwrites nothing and returns false. The probe runs before
+    * the save because an overwrite of an empty frame would clobber the
+    * key's earlier rows.
+    *
+    * No persist around the two: the probe is cheap on the plain plan.
+    * `isEmpty` asks for no column under a `limit 1`, so Catalyst prunes
+    * unreferenced windows and pushes the limit through a group-only
+    * aggregate — for the Report1 report the probe is a filtered scan that
+    * stops at the first surviving row. A persisted plan would cost more
+    * than it saves: AQE does not change a cached plan's output
+    * partitioning (`spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`),
+    * so every exchange inside it keeps its initial partition count and the
+    * save writes one part file per partition, however small the frame.
     */
   private def writeNonEmpty(df: DataFrame, key: String)(
       save: (DataFrameWriter[Row], String) => Unit): Boolean = {
     val target = new Path(base, key).toString
-    val cached = df.persist()
-    try {
-      if (cached.isEmpty) {
-        log.info("empty frame - no file written to {}", target)
-        false
-      } else {
-        save(cached.write.mode("overwrite"), target)
-        true
-      }
-    } finally cached.unpersist()
+    if (df.isEmpty) {
+      log.info("empty frame - no file written to {}", target)
+      false
+    } else {
+      save(df.write.mode("overwrite"), target)
+      true
+    }
   }
 }

@@ -18,9 +18,11 @@ import org.apache.spark.sql.types._
   *    date prefixes that exist (Xetra has none on weekends) go to ONE
   *    multi-path CSV scan with a declared schema — partition pruning, the
   *    reference's one manual optimization (SURVEY.md §4.1). Spark's file
-  *    index lists those prefixes, once, on the driver while there are at
-  *    most 32 of them; the job lists no file itself. The per-file loop +
-  *    concat of the reference collapses into Spark's native file splits.
+  *    index lists those prefixes once: on the driver while there are at
+  *    most 32 of them, above that in one listing job of at most one task
+  *    per core (GraftSession). The job lists no file itself. The per-file
+  *    loop + concat of the reference collapses into Spark's native file
+  *    splits.
   *  - transform: [[Report1.transform]] (the whole C2 chain, Catalyst-fused,
   *    lazy: building it runs no Spark job).
   *  - load: timestamped target key + format-dispatched write, where the

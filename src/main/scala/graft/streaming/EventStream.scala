@@ -165,6 +165,14 @@ object EventStream {
     * mid-batch (a replay re-appends) — a transactional/partition-overwrite
     * sink upgrades the end-to-end guarantee without touching the job.
     *
+    * A restart re-plans the last committed batch: each `runOnce()` starts
+    * a new query, and before its first new batch Spark asks the source for
+    * the last committed one again, which lists that batch's files once
+    * more (nothing is re-read or re-written). Above 32 files that listing
+    * is a Spark job of at most one task per core (GraftSession), so the
+    * first run after a large backfill pays for one parallel listing, not
+    * one task per backfilled file.
+    *
     * Cross-batch lag boundary: `change_prev_*` for the first date of a
     * batch is null — the same boundary the reference handles by re-reading
     * one overlap day (`meta_process.py:77-79`); a deployment wanting

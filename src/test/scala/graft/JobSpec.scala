@@ -153,6 +153,31 @@ class JobSpec extends SparkSpec {
       Seq(Seq("AT1", "2021-04-19", 20.0, 43.0, 19.0, 44.0, 2400L, 100.0)))
   }
 
+  test("run() writes a small report over several instruments as one part file") {
+    // 8 instruments x 3 days: the report's exchanges hash the rows over
+    // every shuffle partition, and the write must still coalesce to one
+    val isins = (1 to 8).map(i => s"AT$i")
+    val root = Files.createTempDirectory("graftjob_parts")
+    val cfg = Configs.load(configFile(root, src =>
+      for (date <- Seq("2021-04-16", "2021-04-17", "2021-04-19")) {
+        val dir = src.resolve(date)
+        Files.createDirectories(dir)
+        Files.writeString(dir.resolve(s"${date}_BINS_XETR09.csv"),
+          header + "\n" + isins.zipWithIndex.map { case (isin, i) =>
+            s"$isin,SANT,$date,09:00,${10 + i},${10 + i},${9 + i},${11 + i},100"
+          }.mkString("\n") + "\n")
+      }).toString)
+    val job = new Report1Job(spark, cfg, clock)
+    assert(job.run())
+    val outDir = root.resolve("trg").resolve("report1")
+    val written = Files.list(outDir).toArray.map(_.toString)
+    assert(written.length == 1)
+    val parts = Files.list(Path.of(written.head)).toArray
+      .map(_.asInstanceOf[Path].getFileName.toString).filter(_.startsWith("part-"))
+    assert(parts.length == 1, parts.mkString(", "))
+    assert(spark.read.parquet(written.head).count() == 16)
+  }
+
   test("connector rejects unknown formats with a typed exception") {
     val root = Files.createTempDirectory("graftconn")
     val c = new Connector(spark, root.toUri.toString)
@@ -247,6 +272,17 @@ class JobSpec extends SparkSpec {
     val back = c.readCsv(files, StructType(Seq(
       StructField("name", StringType), StructField("n", LongType))))
     assert(back.orderBy("name").collect().map(_.toSeq).toSeq ==
+      Seq(Seq("x", 1L), Seq("y", 2L)))
+  }
+
+  test("an empty write leaves the key's earlier rows readable") {
+    val root = Files.createTempDirectory("graftconn5")
+    val c = new Connector(spark, root.toUri.toString)
+    import spark.implicits._
+    assert(c.write(Seq(("x", 1L), ("y", 2L)).toDF("name", "n"), "out", "parquet"))
+    assert(!c.write(Seq.empty[(String, Long)].toDF("name", "n"), "out", "parquet"))
+    assert(spark.read.parquet(root.resolve("out").toString)
+      .orderBy("name").collect().map(_.toSeq).toSeq ==
       Seq(Seq("x", 1L), Seq("y", 2L)))
   }
 

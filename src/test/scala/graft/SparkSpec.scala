@@ -17,6 +17,9 @@ object TestSpark {
     // same extension posture as GraftSession: plan-quality tests must see
     // the engine's own optimizer rules (derived predicates, as-of pushdown)
     .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+    // same listing cap as GraftSession: a parallel file listing runs at
+    // most one task per shuffle partition, not one task per path
+    .config("spark.sql.sources.parallelPartitionDiscovery.parallelism", "4")
     .getOrCreate()
 }
 
@@ -29,35 +32,59 @@ trait SparkSpec extends AnyFunSuite {
   /** sf0.001 testdata dir (driver-generated; TESTDATA.md). */
   val sfDir = "/root/testdata/sf0.001"
 
-  /** Spark jobs started while `body` runs. A marker job before and after
-    * the body fences the count: the listener bus delivers events in order,
-    * so once the closing marker's start event arrives, every job the body
-    * started has been seen, and nothing from earlier tests is counted.
+  /** Spark jobs started while `body` runs. */
+  def sparkJobsStartedBy(body: => Any): Int = sparkJobTasksStartedBy(body).size
+
+  /** Tasks run by each Spark job that `body` started, in start order. A
+    * marker job before and after the body fences the count: the listener
+    * bus delivers events in order, so once the closing marker's start
+    * event arrives, every job the body started has been seen, and nothing
+    * from earlier tests is counted. A job's tasks are those of the stages
+    * it submitted; a stage skipped because its shuffle output already
+    * exists runs none.
     */
-  def sparkJobsStartedBy(body: => Any): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+  def sparkJobTasksStartedBy(body: => Any): Seq[Int] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+      SparkListenerStageSubmitted}
     val sc = spark.sparkContext
-    val starts = new java.util.concurrent.LinkedBlockingQueue[String]()
+    // Left: a job start (description, stage ids); Right: a submitted
+    // stage (stage id, tasks)
+    val events =
+      new java.util.concurrent.LinkedBlockingQueue[Either[(String, Seq[Int]), (Int, Int)]]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        starts.put(Option(e.properties)
+        events.put(Left((Option(e.properties)
           .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse(""))
+          .getOrElse(""), e.stageIds)))
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        events.put(Right((e.stageInfo.stageId, e.stageInfo.numTasks)))
     }
     def marker(name: String): Unit = {
       sc.setJobDescription(name)
       try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
     }
+    def isMarker(name: String)(ev: Either[(String, Seq[Int]), (Int, Int)]) =
+      ev.left.exists(_._1 == name)
     sc.addSparkListener(listener)
     try {
       marker("jobs-fence-open")
       body
       marker("jobs-fence-close")
       val seen = Iterator.continually(
-        Option(starts.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        Option(events.poll(60, java.util.concurrent.TimeUnit.SECONDS))
           .getOrElse(fail("listener bus did not deliver the fence job")))
-        .takeWhile(_ != "jobs-fence-close").toSeq
-      seen.dropWhile(_ != "jobs-fence-open").size - 1
+        .takeWhile(!isMarker("jobs-fence-close")(_)).toSeq
+        .dropWhile(!isMarker("jobs-fence-open")(_)).drop(1)
+      // a stage belongs to the latest job started before it that lists it
+      // (a later job lists it too, as skipped, when it reuses its output)
+      val jobs = scala.collection.mutable.ArrayBuffer.empty[(Set[Int], Int)]
+      seen.foreach {
+        case Left((_, stages)) => jobs += ((stages.toSet, 0))
+        case Right((id, n)) =>
+          val j = jobs.lastIndexWhere(_._1(id))
+          if (j >= 0) jobs(j) = (jobs(j)._1, jobs(j)._2 + n)
+      }
+      jobs.map(_._2).toSeq
     } finally sc.removeSparkListener(listener)
   }
 }

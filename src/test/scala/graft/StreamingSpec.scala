@@ -385,6 +385,48 @@ class StreamingSpec extends SparkSpec {
     assert(!after2(1).isNullAt(after2(1).fieldIndex("change_prev_closing_pct")))
   }
 
+  test("a restarted report stream lists its last batch in one task per core at most") {
+    import org.apache.spark.sql.types._
+    val root = java.nio.file.Files.createTempDirectory("stream_relist")
+    val srcDir = root.resolve("src")
+    val header =
+      "ISIN,Mnemonic,Date,Time,StartPrice,EndPrice,MinPrice,MaxPrice,TradedVolume"
+    def stage(date: String, hour: Int): Unit = {
+      val d = srcDir.resolve(date); java.nio.file.Files.createDirectories(d)
+      val hh = f"$hour%02d"
+      java.nio.file.Files.writeString(d.resolve(s"${date}_BINS_XETR$hh.csv"),
+        s"$header\nAT1,SANT,$date,$hh:00,${20 + hour},20.0,19.0,${21 + hour},100\n")
+    }
+    val cols = Seq("ISIN", "Mnemonic", "Date", "Time", "StartPrice",
+      "EndPrice", "MinPrice", "MaxPrice", "TradedVolume")
+    val schema = StructType(cols.map {
+      case c @ ("ISIN" | "Mnemonic" | "Date" | "Time") => StructField(c, StringType)
+      case c @ "TradedVolume" => StructField(c, LongType)
+      case c => StructField(c, DoubleType)
+    })
+    val job = new EventStream.Report1StreamJob(spark,
+      s"$srcDir/*", root.resolve("out").toString,
+      root.resolve("chk").toString, schema,
+      ops.Report1SourceCols(columns = cols),
+      ops.Report1TargetCols(changePrevClosing = "change_prev_closing_pct"))
+
+    // first micro-batch: 2 days x 20 hourly files, above Spark's 32-path
+    // threshold for listing in a Spark job
+    for (date <- Seq("2021-04-15", "2021-04-16"); h <- 0 until 20) stage(date, h)
+    job.runOnce()
+    stage("2021-04-19", 7)
+    // the restart asks the source for the committed first batch again,
+    // which lists its 40 files once more
+    val tasks = sparkJobTasksStartedBy(job.runOnce())
+    val cores = spark.sparkContext.defaultParallelism
+    assert(tasks.nonEmpty && tasks.forall(_ <= cores),
+      s"per-job tasks $tasks, cores $cores")
+    val out = spark.read.parquet(root.resolve("out").toString)
+      .orderBy("Date").collect()
+    assert(out.map(_.getAs[String]("Date")).toSeq ==
+      Seq("2021-04-15", "2021-04-16", "2021-04-19"))
+  }
+
   test("streaming dedup drops replayed events across micro-batches") {
     // stage the SAME events file twice (an at-least-once redelivery) and
     // force two micro-batches: the second copy must be fully dropped by
