@@ -5,8 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** The engine's session posture in ONE place (SURVEY.md §7.4.7): AQE on,
   * UTC, shuffle parallelism sized to the machine (never the 200-partition
   * default), dynamic partition overwrite for idempotent partitioned loads,
-  * and the graft Catalyst extensions (functions + as-of strategy + pushdown
-  * rule) registered at build time. `Verify`/`Bench`/`Main` and library
+  * the graft Catalyst extensions (functions + as-of strategy + pushdown
+  * rule) registered at build time, and one executor class loader (so one
+  * codegen cache) for every session. `Verify`/`Bench`/`Main` and library
   * users all start here, so a tuning change lands everywhere at once.
   *
   * Note the queries themselves never *require* this posture: each one
@@ -56,6 +57,17 @@ object GraftSession {
       // cluster it still lists in parallel.
       .config("spark.sql.sources.parallelPartitionDiscovery.parallelism",
         shufflePartitions.toString)
+      // Spark 4 gives every session its own executor class loader by
+      // default, for artifacts (jars, classes) added to that session. The
+      // codegen cache is keyed by class loader, so each new session — a
+      // `newSession()`, and the clone every streaming query runs its
+      // batches in — would recompile the whole-stage code the sessions
+      // before it compiled and run it cold (27 classes per
+      // Report1StreamJob.runOnce()). The engine adds no session artifacts,
+      // so the isolation guards nothing here; off, every session's tasks
+      // share the default loader and one codegen cache. Spark reads it when
+      // a session is built, so it is set here, not per query.
+      .config("spark.sql.artifact.isolation.enabled", "false")
       // Runtime semi-reduction (InjectRuntimeFilter): Spark 4 enables the
       // rule by default but its thresholds are cluster-sized — the probe
       // side must scan >10 GiB and the build side estimate <10 MiB, so at

@@ -48,8 +48,11 @@ final case class Report1TargetCols(
   *  - W1/W2 need an explicit full frame: pandas `transform("first"/"last")`
   *    broadcasts the group scalar to every row; Spark's default window frame
   *    (unboundedPreceding→currentRow) silently disagrees for `last`.
-  *  - E2 rounding is `bround` (HALF_EVEN, = numpy banker's rounding), never
-  *    `round` (HALF_UP).
+  *  - E2 rounding is `bround` (HALF_EVEN), never `round` (HALF_UP). It
+  *    matches numpy's banker's rounding except at a decimal tie: `bround`
+  *    rounds the decimal form (-32.675 → -32.68), numpy the binary double
+  *    (-32.67499… → -32.67). FIXTURES.md specifies `bround`; README lists
+  *    the deviation.
   *  - P3 compares the date column as an ISO *string* (lexicographic), exactly
   *    as the reference does (`xetra_transformer.py:203-206`).
   *  - `tradedVolume` stays integral through `sum` (LongType, not double).

@@ -173,6 +173,12 @@ object EventStream {
     * first run after a large backfill pays for one parallel listing, not
     * one task per backfilled file.
     *
+    * Each run's query runs its batches in a clone of the session. The
+    * clone shares the executor class loader, and so the codegen cache,
+    * with every other session (GraftSession turns session artifact
+    * isolation off), so a daily run reuses the classes the runs before it
+    * compiled instead of compiling them again and running them cold.
+    *
     * Cross-batch lag boundary: `change_prev_*` for the first date of a
     * batch is null — the same boundary the reference handles by re-reading
     * one overlap day (`meta_process.py:77-79`); a deployment wanting

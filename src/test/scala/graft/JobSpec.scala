@@ -275,6 +275,21 @@ class JobSpec extends SparkSpec {
       Seq(Seq("x", 1L), Seq("y", 2L)))
   }
 
+  test("listPrefix names the files under a prefix, nested ones too, sorted") {
+    val root = Files.createTempDirectory("graftconn6")
+    val c = new Connector(spark, root.toUri.toString)
+    for (f <- Seq("d/b.csv", "d/a.csv", "d/sub/c.csv", "e/x.csv")) {
+      Files.createDirectories(root.resolve(f).getParent)
+      Files.writeString(root.resolve(f), "x\n")
+    }
+    Files.createDirectories(root.resolve("d/empty"))
+    val uri = new org.apache.hadoop.fs.Path(root.toUri.toString).toString
+    assert(c.listPrefix("d") ==
+      Seq("d/a.csv", "d/b.csv", "d/sub/c.csv").map(f => s"$uri/$f"))
+    assert(c.listPrefix("d/a.csv") == Seq(s"$uri/d/a.csv"))
+    assert(c.listPrefix("missing").isEmpty)
+  }
+
   test("an empty write leaves the key's earlier rows readable") {
     val root = Files.createTempDirectory("graftconn5")
     val c = new Connector(spark, root.toUri.toString)

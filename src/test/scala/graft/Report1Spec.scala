@@ -75,6 +75,19 @@ class Report1Spec extends SparkSpec {
       golden.map(_.toSeq))
   }
 
+  test("a decimal tie rounds half-even on its decimal form: -32.675 -> -32.68") {
+    // -32.675 is -32.67499... as a double, so numpy/pandas give -32.67;
+    // bround rounds the decimal form (README, known deviations)
+    val tie = Seq(("AT1", "SANT", "2021-04-19", "09:00",
+      -32.675, -32.675, -32.675, -32.675, 1L))
+      .toDF("ISIN", "Mnemonic", "Date", "Time", "StartPrice", "EndPrice",
+        "MinPrice", "MaxPrice", "TradedVolume")
+    val row = Report1.transform(tie, extractDate = "2021-04-19").head()
+    for (c <- Seq("opening_price_eur", "closing_price_eur",
+        "minimum_price_eur", "maximum_price_eur"))
+      assert(row.getAs[Double](c) == -32.68, c)
+  }
+
   test("rows with any null are dropped before aggregation") {
     val withNull = fixture.unionByName(
       Seq(("AT0000A0E9W5", null.asInstanceOf[String], "2021-04-19", "10:00",

@@ -253,24 +253,14 @@ class Round17PropertySpec extends SparkSpec {
     // heartbeat/network timeouts are a single-JVM-local rationale and must
     // NOT ship to a cluster master where they would delay dead-executor
     // detection by 20 minutes.
-    def options(master: String): Map[String, String] = {
-      val b = GraftSession.builder(master, 8)
-      val f = Iterator.iterate[Class[_]](b.getClass)(_.getSuperclass)
-        .takeWhile(_ != null)
-        .flatMap(_.getDeclaredFields.find(_.getName == "options"))
-        .next()
-      f.setAccessible(true)
-      f.get(b).asInstanceOf[scala.collection.mutable.HashMap[String, String]]
-        .toMap
-    }
-    val local = options("local[8]")
+    val local = graftSessionOptions("local[8]")
     assert(local("spark.sql.optimizer.runtime.bloomFilter.maxNumBits")
       == (256L << 20).toString)
     assert(local("spark.sql.optimizer.runtime.bloomFilter.maxNumItems")
       == (32L << 20).toString)
     assert(local.contains("spark.network.timeout") &&
       local.contains("spark.executor.heartbeatInterval"))
-    val cluster = options("spark://host:7077")
+    val cluster = graftSessionOptions("spark://host:7077")
     assert(cluster("spark.sql.optimizer.runtime.bloomFilter.maxNumBits")
       == (256L << 20).toString, "bloom ceilings must apply on clusters too")
     assert(!cluster.contains("spark.network.timeout") &&

@@ -85,18 +85,8 @@ class Round18PropertySpec extends SparkSpec {
     // last-decade signature), and the runtime bloom-filter thresholds must
     // be rescaled from their cluster-sized defaults (10 GiB probe / 10 MiB
     // build) under which the injection NEVER fires at a measurable shape.
-    def options(master: String): Map[String, String] = {
-      val b = GraftSession.builder(master, 8)
-      val f = Iterator.iterate[Class[_]](b.getClass)(_.getSuperclass)
-        .takeWhile(_ != null)
-        .flatMap(_.getDeclaredFields.find(_.getName == "options"))
-        .next()
-      f.setAccessible(true)
-      f.get(b).asInstanceOf[scala.collection.mutable.HashMap[String, String]]
-        .toMap
-    }
     for (master <- Seq("local[8]", "spark://host:7077")) {
-      val o = options(master)
+      val o = graftSessionOptions(master)
       assert(o("spark.sql.adaptive.coalescePartitions.initialPartitionNum")
         .toInt == 64, s"initial reducer count must be 8x parallelism ($master)")
       assert(o("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold")

@@ -20,6 +20,9 @@ object TestSpark {
     // same listing cap as GraftSession: a parallel file listing runs at
     // most one task per shuffle partition, not one task per path
     .config("spark.sql.sources.parallelPartitionDiscovery.parallelism", "4")
+    // same class-loader posture as GraftSession: new and cloned sessions
+    // reuse the compiled code of the ones before them
+    .config("spark.sql.artifact.isolation.enabled", "false")
     .getOrCreate()
 }
 
@@ -31,6 +34,30 @@ trait SparkSpec extends AnyFunSuite {
   }
   /** sf0.001 testdata dir (driver-generated; TESTDATA.md). */
   val sfDir = "/root/testdata/sf0.001"
+
+  /** The confs `GraftSession.builder(master, 8)` sets, read from the
+    * builder without starting a session.
+    */
+  def graftSessionOptions(master: String): Map[String, String] = {
+    val b = GraftSession.builder(master, 8)
+    val f = Iterator.iterate[Class[_]](b.getClass)(_.getSuperclass)
+      .takeWhile(_ != null)
+      .flatMap(_.getDeclaredFields.find(_.getName == "options"))
+      .next()
+    f.setAccessible(true)
+    f.get(b).asInstanceOf[scala.collection.mutable.HashMap[String, String]]
+      .toMap
+  }
+
+  /** Classes Spark's code generator compiled while `body` ran, driver and
+    * (local-mode) executor side; a cache hit compiles none.
+    */
+  def codegenCompilesBy(body: => Any): Long = {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    body
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+  }
 
   /** Spark jobs started while `body` runs. */
   def sparkJobsStartedBy(body: => Any): Int = sparkJobTasksStartedBy(body).size

@@ -385,9 +385,14 @@ class StreamingSpec extends SparkSpec {
     assert(!after2(1).isNullAt(after2(1).fieldIndex("change_prev_closing_pct")))
   }
 
-  test("a restarted report stream lists its last batch in one task per core at most") {
+  /** A [[EventStream.Report1StreamJob]] over a fresh landing directory,
+    * with `stage(date, hour)` landing that hour's file (one AT1 bar) and
+    * the job's parquet output directory.
+    */
+  private def reportStream(name: String)
+      : ((String, Int) => Unit, EventStream.Report1StreamJob, String) = {
     import org.apache.spark.sql.types._
-    val root = java.nio.file.Files.createTempDirectory("stream_relist")
+    val root = java.nio.file.Files.createTempDirectory(name)
     val srcDir = root.resolve("src")
     val header =
       "ISIN,Mnemonic,Date,Time,StartPrice,EndPrice,MinPrice,MaxPrice,TradedVolume"
@@ -404,11 +409,16 @@ class StreamingSpec extends SparkSpec {
       case c @ "TradedVolume" => StructField(c, LongType)
       case c => StructField(c, DoubleType)
     })
+    val out = root.resolve("out").toString
     val job = new EventStream.Report1StreamJob(spark,
-      s"$srcDir/*", root.resolve("out").toString,
-      root.resolve("chk").toString, schema,
+      s"$srcDir/*", out, root.resolve("chk").toString, schema,
       ops.Report1SourceCols(columns = cols),
       ops.Report1TargetCols(changePrevClosing = "change_prev_closing_pct"))
+    (stage, job, out)
+  }
+
+  test("a restarted report stream lists its last batch in one task per core at most") {
+    val (stage, job, outDir) = reportStream("stream_relist")
 
     // first micro-batch: 2 days x 20 hourly files, above Spark's 32-path
     // threshold for listing in a Spark job
@@ -421,10 +431,27 @@ class StreamingSpec extends SparkSpec {
     val cores = spark.sparkContext.defaultParallelism
     assert(tasks.nonEmpty && tasks.forall(_ <= cores),
       s"per-job tasks $tasks, cores $cores")
-    val out = spark.read.parquet(root.resolve("out").toString)
-      .orderBy("Date").collect()
+    val out = spark.read.parquet(outDir).orderBy("Date").collect()
     assert(out.map(_.getAs[String]("Date")).toSeq ==
       Seq("2021-04-15", "2021-04-16", "2021-04-19"))
+  }
+
+  test("later report stream runs reuse the first run's compiled code") {
+    val (stage, job, outDir) = reportStream("stream_codegen")
+
+    for (date <- Seq("2021-04-15", "2021-04-16"); h <- Seq(9, 10)) stage(date, h)
+    job.runOnce()
+    // each run clones the session; the clone's tasks must find the code the
+    // previous run compiled, not compile it again for a loader of their own
+    stage("2021-04-19", 9)
+    val second = codegenCompilesBy(job.runOnce())
+    stage("2021-04-20", 9)
+    val third = codegenCompilesBy(job.runOnce())
+    assert(second == 0 && third == 0,
+      s"classes compiled: second run $second, third run $third")
+    val out = spark.read.parquet(outDir).orderBy("Date").collect()
+    assert(out.map(_.getAs[String]("Date")).toSeq ==
+      Seq("2021-04-15", "2021-04-16", "2021-04-19", "2021-04-20"))
   }
 
   test("streaming dedup drops replayed events across micro-batches") {
