@@ -81,6 +81,11 @@ def main():
     oracle = json.load(open(f"{OUT}/oracle_sql.json"))
     results = sorted(os.listdir(OUT))
     fails = 0
+    # queries that threw inside Verify, with their messages
+    failed_path = f"{OUT}/failures.json"
+    failed = json.load(open(failed_path)) if os.path.exists(failed_path) else {}
+    for name, msg in failed.items():
+        print(f"✗ {name:34s} FAILED IN VERIFY: {msg[:300]}")
     # a query that crashed inside Verify has an oracle but no dump — that
     # must FAIL loudly, not silently drop out of the comparison
     for name in oracle:
@@ -88,7 +93,7 @@ def main():
             print(f"✗ {name:34s} NO RESULT DUMP (query failed in Verify?)")
             fails += 1
     for name in results:
-        if name == 'oracle_sql.json' or name.startswith('.') \
+        if name in ('oracle_sql.json', 'failures.json') or name.startswith('.') \
                 or (ONLY and name not in ONLY):
             continue
         got_rel = con.sql(

@@ -21,10 +21,6 @@ object Bench {
   private val LineBudget = 1800
 
   def main(args: Array[String]): Unit = {
-    // single-session process: pin the memo caches strongly so the explicit
-    // GCs below can never clear a SoftReference and land a recompute spike
-    // inside a timed query (see SessionMemo.pinSessions)
-    SessionMemo.pinSessions = true
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
@@ -61,9 +57,9 @@ object Bench {
     // builder-vs-driver bench divergence of round 5. An explicit GC
     // between passes and every 25 timed queries (OUTSIDE the timed
     // window) keeps the block manager near-empty; the session-scoped
-    // memo caches (Dedup.pairsCache, DedupClusters caches, …) survive
-    // because pinSessions above holds them strongly for this process.
-    // Memoized-base block budget (SessionMemo.enforceBudget): pinned memo
+    // memo caches (Dedup.pairsCache, DedupClusters caches, …) survive it,
+    // because a live session holds its memo entries strongly.
+    // Memoized-base block budget (SessionMemo.enforceBudget): memo
     // blocks are evicted LRU at query boundaries once they outgrow this
     // many bytes, so a long suite at a big corpus cannot accumulate
     // session-lifetime localCheckpoint blocks past storage memory (the

@@ -1,246 +1,142 @@
 package graft
 
-import java.lang.ref.SoftReference
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Attribute, ExpressionSet, SortOrder}
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.plans.physical.Partitioning
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.execution.columnar.InMemoryRelation
 
 private[graft] object SessionMemo {
-  /** When true, memo maps are ALSO held strongly (per session), disabling
-    * reclamation. Set by the single-session mains (Bench/Verify/Main):
-    * there the process lifetime IS the session lifetime, so reclaimability
-    * buys nothing — while a GC-cleared soft reference mid-suite silently
-    * drops cached (often `localCheckpoint`ed) DataFrames and lands a
-    * multi-second recompute spike on whichever timed query touches the
-    * cold cache first (the r7 `dedup_semantic_clusters` 2.2s→4.5s bench
-    * regression class). Long-lived multi-session servers keep the default
-    * soft behavior and its leak-freedom.
-    *
-    * The flag is symmetric: flipping it back to `false` drops every strong
-    * pin across all memo instances (the maps stay reachable through the
-    * soft path until the collector decides otherwise), so a multi-session
-    * process that pinned temporarily does not leak each session it touched
-    * while pinned. Memo *instances* live in static operator objects, so
-    * the registry below holds a bounded, process-lifetime set — no leak.
+  /** Every memo instance. They live in static operator objects, so this is
+    * a bounded, process-lifetime set.
     */
   private val instances =
     new java.util.concurrent.CopyOnWriteArrayList[SessionMemo[_]]()
 
-  private[graft] def register(m: SessionMemo[_]): Unit = instances.add(m)
-
-  @volatile private var _pinSessions: Boolean = false
-
-  private[graft] def pinSessions: Boolean = _pinSessions
-
-  private[graft] def pinSessions_=(v: Boolean): Unit = {
-    _pinSessions = v
-    if (!v) instances.forEach(_.clearPinned())
-  }
-
   /** Global LRU clock: bumped on every memo touch (hit or store). */
   private val clock = new java.util.concurrent.atomic.AtomicLong(0L)
-  private[graft] def tick(): Long = clock.incrementAndGet()
 
-  /** Every [[Dataset]] nested in a memo value (values are DataFrames,
-    * tuples/seqs of DataFrames, or scalars).
-    */
-  private[graft] def datasetsIn(v: Any): Seq[Dataset[_]] = v match {
-    case d: Dataset[_]     => Seq(d)
-    case p: Product        => p.productIterator.flatMap(datasetsIn).toSeq
-    case it: Iterable[_]   => it.iterator.flatMap(datasetsIn).toSeq
-    case _                 => Nil
-  }
+  private def tick(): Long = clock.incrementAndGet()
 
-  /** The materialized-block handles a memo value's plan references: every
-    * `LogicalRDD` in the analyzed plan. For a `localCheckpoint`ed value
-    * the ROOT is its own checkpoint RDD; interior LogicalRDDs are other
-    * memos' bases the plan still reads (a `persist()`-style value that
-    * was never checkpointed itself).
-    */
-  private[graft] def referencedRdds(v: Any): Seq[RDD[_]] =
-    datasetsIn(v).flatMap(_.queryExecution.analyzed.collect {
-      case lr: LogicalRDD => lr.rdd
-    })
-
-  /** The CacheManager-held blocks behind a memo dataset: every
-    * `InMemoryRelation` the cache-substituted plan reads, resolved to its
-    * column-buffer RDD (the id `getRDDStorageInfo` reports persisted bytes
-    * under). A `persist()`-style memo value stores its blocks HERE, not in
-    * any `LogicalRDD` — [[referencedRdds]] alone attributed such entries
-    * 0 bytes, so a session dominated by persist-style memos could exceed
-    * the budget indefinitely without an eviction ever firing.
+  /** Bound the block-manager bytes held by a session's memoized checkpoints
+    * (the r10 verdict's 100×-suite finding: bases that outgrow storage
+    * memory slow every later query).
     *
-    * `lookupCachedData` resolves by plan `sameResult`, so two semantically
-    * identical cached DataFrames map to the SAME buffer RDD — exactly the
-    * sharing relation eviction must respect before `unpersist()`.
-    */
-  private[graft] def cachedBufferRdds(d: Dataset[_]): Seq[RDD[_]] =
-    d.queryExecution.withCachedData.collect {
-      case r: InMemoryRelation => r.cacheBuilder.cachedColumnBuffers
-    }
-
-  /** Bound the block-manager bytes held by memoized bases — the
-    * accumulated-`localCheckpoint` posture fix for long sessions (the
-    * r10 verdict's 100×-suite finding: session-lifetime pins distorted
-    * suite timings ~3.5× once the pinned bases outgrew storage memory,
-    * and a 100 TB session would hit the same wall).
+    * MUST be called only BETWEEN queries: a checkpoint's lineage is
+    * truncated, so a plan still reading evicted blocks cannot recompute
+    * them. Between queries no plan is outstanding and the memo is the only
+    * owner, which is why this is an explicit call at query boundaries
+    * (Bench, Verify), not a cap inside [[SessionMemo.getOrElseUpdate]].
     *
-    * MUST be called only BETWEEN queries: evicting a `localCheckpoint`ed
-    * base whose blocks a still-held plan references is unrecoverable
-    * (checkpointing truncates lineage, so there is nothing to recompute
-    * from). Between queries no plan is outstanding — the memo maps are
-    * the only owners — which is why this is an explicit API driven by
-    * Bench/Verify/servers at their query boundaries, not an implicit
-    * cap inside [[SessionMemo.getOrElseUpdate]].
-    *
-    * Policy: least-recently-touched entries are dropped until the bytes
-    * attributed to live memo entries fit `budgetBytes`. An entry's bytes
-    * are its checkpoint blocks ([[referencedRdds]]) PLUS its CacheManager
-    * blocks ([[cachedBufferRdds]]) — a `persist()`-style value holds its
-    * bytes only through the latter. Dropping an entry removes it from its
-    * map (next touch recomputes — a cache, never a correctness surface)
-    * and unpersists exactly those of its blocks that NO surviving entry
-    * still references, on BOTH paths: shared checkpoint RDDs stay
-    * persisted, and a shared CacheManager entry (lookup is by plan
-    * `sameResult`) is not dropped out from under a surviving twin.
-    * Returns the names of evicted entries (observability + tests).
+    * Least-recently-touched checkpoints are unpersisted and dropped from
+    * their memo until the rest fit `budgetBytes`; the next touch of a
+    * dropped key runs its body again. Each entry owns its blocks (the memo
+    * made them), so no other entry can lose them. Returns the evicted keys.
     */
   private[graft] def enforceBudget(s: SparkSession, budgetBytes: Long)
       : Seq[String] = {
-    val entries = instances.toArray(Array.empty[SessionMemo[_]]).toSeq
-      .flatMap(m => m.liveEntries(s).map(e => (m, e)))
-    if (entries.isEmpty) return Nil
     val sizes: Map[Int, Long] = s.sparkContext.getRDDStorageInfo
       .map(i => i.id -> (i.memSize + i.diskSize)).toMap
-    // resolve each entry's cache-manager blocks ONCE per sweep (plan walks
-    // + cache lookups are not free); ids = checkpoint blocks (LogicalRDD)
-    // ∪ persist()-style blocks (InMemoryRelation column buffers)
-    final case class Live(memo: SessionMemo[_], e: MemoEntry,
-        cached: Seq[RDD[_]]) {
-      val ids: Set[Int] = (e.rdds ++ cached).map(_.id).toSet
+    def bytes(c: Checkpoint): Long = sizes.getOrElse(c.rdd.id, 0L)
+    val held = instances.asScala.toSeq
+      .flatMap(m => m.entries(s).collect {
+        case (key, c: Checkpoint, tick) => (m, key, c, tick) })
+      .sortBy(_._4) // oldest first
+    var total = held.map(h => bytes(h._3)).sum
+    // the filter reads `total` as each eviction lowers it
+    for ((m, key, c, _) <- held if total > budgetBytes) yield {
+      total -= bytes(c)
+      c.rdd.unpersist(blocking = false)
+      m.drop(s, key)
+      key
     }
-    var live = entries
-      .map { case (m, e) => Live(m, e, e.datasets.flatMap(cachedBufferRdds)) }
-      .sortBy(_.e.tick) // oldest first
-    def totalBytes: Long =
-      live.flatMap(_.ids).distinct.map(id => sizes.getOrElse(id, 0L)).sum
-    val evicted = scala.collection.mutable.ListBuffer[String]()
-    while (totalBytes > budgetBytes && live.nonEmpty) {
-      val victim = live.head
-      live = live.tail
-      val stillReferenced = live.flatMap(_.ids).toSet
-      victim.e.rdds.filterNot(r => stillReferenced(r.id))
-        .foreach(_.unpersist(blocking = false))
-      // a persist()-style value also owns a CacheManager entry keyed by
-      // its (now-stale) plan that no future lookup can ever reuse — drop
-      // it, or its materialized blocks leak for the session lifetime.
-      // UNLESS a surviving entry holds the same cached plan (lookup is by
-      // sameResult, so "same" includes semantically identical twins):
-      // unpersist() drops the shared CacheManager entry itself, and the
-      // survivor would silently lose its blocks — skip those datasets,
-      // mirroring the stillReferenced check on checkpoint RDDs.
-      victim.e.datasets.foreach { d =>
-        val shared = cachedBufferRdds(d).exists(r => stillReferenced(r.id))
-        if (!shared) try d.unpersist() catch { case _: Throwable => () }
-      }
-      victim.memo.drop(s, victim.e.key)
-      evicted += victim.e.key
-    }
-    evicted.toList
   }
 }
 
-/** One live memo entry: its key, the block handles its value references,
-  * and its last-touch tick (LRU order).
-  */
-private[graft] final case class MemoEntry(
-    key: String, rdds: Seq[RDD[_]], datasets: Seq[Dataset[_]], tick: Long)
-
-/** Per-session, per-key memo for derived DataFrames and chains.
+/** Per-session, per-key memo for values the queries of one session share.
   *
-  * Keyed weakly by the [[SparkSession]] with the per-session map held
-  * through a [[SoftReference]]. The soft indirection is what makes the weak
-  * keying real: a cached DataFrame strongly references its session, so a
-  * `WeakHashMap[SparkSession, Map[_, DataFrame]]` violates the
-  * value-must-not-reference-key rule and pins every entry for the JVM
-  * lifetime. With the inner map only softly reachable, the session's only
-  * path back to itself goes through the soft reference, which the collector
-  * may clear — under memory pressure the memo is dropped (and recomputed on
-  * next use, it is a cache), and an otherwise-unreferenced session stops
-  * being reachable through the cache at the latest before an OOM.
+  * One rule: a memo value holds no session. The memo is keyed weakly by
+  * the [[SparkSession]] and holds each session's entries strongly, so a
+  * live session keeps its entries through any collection, and a session
+  * nothing else references is collected together with them. A value that
+  * referenced its session would keep its own weak key reachable forever;
+  * that is why a DataFrame is never a value here: [[FrameMemo]] stores
+  * the session-free parts of a frame's checkpoint instead.
   *
-  * [[SessionMemo.pinSessions]] opts a single-session process out of the
-  * reclamation: the inner map is then also strongly referenced (which
-  * intentionally pins the session entry — exactly the behavior the soft
-  * design exists to avoid in servers), so bench/verify timings can never
-  * be distorted by a collector clearing the memo between queries.
-  * [[SessionMemo.enforceBudget]] is the complementary bound: a pinned
-  * session's memo BLOCKS are still evictable at query boundaries once
-  * they outgrow a byte budget.
+  * A body runs at most once per (session, key). The memo is locked only to
+  * find the key's cell; the body runs under that cell's own lock, so a
+  * running Spark job holds up no other key and no other session. A body
+  * that throws stores nothing, and the next caller runs it again.
   */
 private[graft] final class SessionMemo[V] {
 
-  /** value + LRU/block bookkeeping ([[SessionMemo.enforceBudget]]). */
-  private final class Cell(val value: V, val rdds: Seq[RDD[_]]) {
-    @volatile var tick: Long = SessionMemo.tick()
+  /** One key's value (once computed) and its last-touch tick (LRU order). */
+  private final class Cell {
+    @volatile var value: Option[V] = None
+    @volatile var tick: Long = 0L
+
+    def get(compute: => V): V = synchronized {
+      if (value.isEmpty) value = Some(compute)
+      tick = SessionMemo.tick()
+      value.get
+    }
   }
 
-  private val cache =
-    new java.util.WeakHashMap[SparkSession,
-      SoftReference[scala.collection.mutable.Map[String, Cell]]]()
+  private val sessions =
+    new java.util.WeakHashMap[SparkSession, mutable.Map[String, Cell]]()
 
-  // populated only under pinSessions; values reference their key's session
-  // through the cached DataFrames, deliberately defeating the weak keying
-  private val pinned =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String, Cell]]()
-
-  SessionMemo.register(this)
-
-  /** Drop every strong pin (called when [[SessionMemo.pinSessions]] flips
-    * off). Entries remain visible through the soft path until collected.
-    */
-  private[graft] def clearPinned(): Unit =
-    cache.synchronized { pinned.clear() }
-
-  /** Number of sessions currently pinned strongly (test observability). */
-  private[graft] def pinnedSessionCount: Int =
-    cache.synchronized { pinned.size }
-
-  private def innerFor(s: SparkSession)
-      : Option[scala.collection.mutable.Map[String, Cell]] =
-    Option(pinned.get(s))
-      .orElse(Option(cache.get(s)).flatMap(r => Option(r.get)))
-
-  /** Current entries for a session (eviction bookkeeping). */
-  private[graft] def liveEntries(s: SparkSession): Seq[MemoEntry] =
-    cache.synchronized {
-      innerFor(s).toSeq.flatMap(_.map { case (k, c) =>
-        MemoEntry(k, c.rdds, SessionMemo.datasetsIn(c.value), c.tick) })
-    }
-
-  /** Remove one entry (eviction path — block unpersist happens in
-    * [[SessionMemo.enforceBudget]], which knows cross-entry sharing).
-    */
-  private[graft] def drop(s: SparkSession, key: String): Unit =
-    cache.synchronized { innerFor(s).foreach(_.remove(key)) }
+  SessionMemo.instances.add(this)
 
   def getOrElseUpdate(s: SparkSession, key: String)(compute: => V): V =
-    cache.synchronized {
-      val inner = innerFor(s)
-        .getOrElse(scala.collection.mutable.Map.empty[String, Cell])
-      cache.put(s, new SoftReference(inner))
-      if (SessionMemo.pinSessions) pinned.put(s, inner)
-      inner.get(key) match {
-        case Some(cell) =>
-          cell.tick = SessionMemo.tick()
-          cell.value
-        case None =>
-          val v = compute
-          inner.put(key, new Cell(v, SessionMemo.referencedRdds(v)))
-          v
-      }
+    sessions.synchronized {
+      sessions.computeIfAbsent(s, _ => mutable.Map.empty[String, Cell])
+        .getOrElseUpdate(key, new Cell)
+    }.get(compute)
+
+  /** A session's computed entries: key, value, last-touch tick. */
+  private def entries(s: SparkSession): Seq[(String, V, Long)] =
+    sessions.synchronized {
+      Option(sessions.get(s)).toSeq.flatMap(_.toSeq.flatMap {
+        case (k, c) => c.value.map(v => (k, v, c.tick)) })
+    }
+
+  private def drop(s: SparkSession, key: String): Unit =
+    sessions.synchronized { Option(sessions.get(s)).foreach(_.remove(key)) }
+}
+
+/** A memo of DataFrames that owns their materialization: a body returns
+  * its frame unmaterialized, and the memo `localCheckpoint`s it once per
+  * (session, key). It keeps only the parts of the checkpoint's
+  * `LogicalRDD` leaf that hold no session, and every call rebinds them to
+  * the caller's session, with the same attribute ids, so plans built on a
+  * hit equal those built on the first call.
+  */
+private[graft] final class FrameMemo {
+  private val memo = new SessionMemo[Checkpoint]
+
+  def getOrElseUpdate(s: SparkSession, key: String)(body: => DataFrame)
+      : DataFrame = {
+    val c = memo.getOrElseUpdate(s, key)(Checkpoint(body))
+    GraftSqlBridge.ofRdd(s, c.output, c.rdd, c.partitioning, c.ordering,
+      c.stats, c.constraints)
+  }
+}
+
+/** The session-free parts of a checkpointed frame's `LogicalRDD` leaf. */
+private[graft] final case class Checkpoint(output: Seq[Attribute],
+    rdd: RDD[InternalRow], partitioning: Partitioning,
+    ordering: Seq[SortOrder], stats: Statistics, constraints: ExpressionSet)
+
+private[graft] object Checkpoint {
+  def apply(df: DataFrame): Checkpoint =
+    df.localCheckpoint().queryExecution.analyzed match {
+      case lr: LogicalRDD => Checkpoint(lr.output, lr.rdd,
+        lr.outputPartitioning, lr.outputOrdering, lr.computeStats(),
+        lr.constraints)
     }
 }

@@ -2,10 +2,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare, and
+  * failures.json (query name → error message; `{}` when none failed). */
 object Verify {
   def main(args: Array[String]): Unit = {
-    SessionMemo.pinSessions = true // single-session process (see SessionMemo)
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
@@ -27,11 +27,13 @@ object Verify {
     // /tmp/sf10 skips exactly that family and runs everything else.
     val skip = sys.env.get("SPARK_GRAFT_VERIFY_SKIP")
       .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty)
+    val failures = scala.collection.mutable.LinkedHashMap[String, String]()
     SparkEntry.queries.filterNot(q => skip(q._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        failures(name) = String.valueOf(e.getMessage)
       }
       memoBudget.filter(_ > 0).foreach { b =>
         val ev = SessionMemo.enforceBudget(spark, b)
@@ -52,9 +54,11 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    def json(m: Iterable[(String, String)]): String =
+      m.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      json(SparkEntry.oracleSql))
+    Files.writeString(Paths.get(s"$outDir/failures.json"), json(failures))
     spark.stop()
   }
 }

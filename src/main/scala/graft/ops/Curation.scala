@@ -36,7 +36,7 @@ object Curation {
     * expensive per-row expression in the family, because ExistingRDD-
     * rooted subtrees are never shared by AQE stage reuse.
     */
-  private val passingCache = new graft.SessionMemo[DataFrame]
+  private val passingCache = new graft.FrameMemo
 
   private def passing(s: SparkSession, dir: String): DataFrame =
     passingCache.getOrElseUpdate(s, dir) {
@@ -48,7 +48,6 @@ object Curation {
         .filter(col("n_tokens") >= MinTokens && col("ttr") >= MinTtr &&
           col("lang").isin(LangAllow: _*))
         .select(col("doc_id"), col("lang"), col("source"), col("n_tokens"))
-        .localCheckpoint()
     }
 
   /** The shared dedup-losers SQL block (sh → ex → cand → sz → losers) —

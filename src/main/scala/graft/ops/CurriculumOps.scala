@@ -51,16 +51,12 @@ object CurriculumOps {
     bucketTable(s, dir).orderBy("bucket")
 
   /** Session memo of the 10-row bucket table so the pacing schedule and
-    * the decile listing share ONE scoring/bucketing job per session (the
-    * [[TextOps]] bpeCache pattern; [[SessionMemo]] holds the per-session
-    * map softly, so the memo and its session are reclaimable rather than
-    * JVM-pinned).
+    * the decile listing share ONE scoring/bucketing job per session.
     */
-  private val bucketCache = new graft.SessionMemo[DataFrame]
+  private val bucketCache = new graft.FrameMemo
 
   private def bucketTable(s: SparkSession, dir: String): DataFrame =
-    bucketCache.getOrElseUpdate(s, dir)(
-      bucketTableUncached(s, dir).localCheckpoint())
+    bucketCache.getOrElseUpdate(s, dir)(bucketTableUncached(s, dir))
 
   private def bucketTableUncached(s: SparkSession, dir: String): DataFrame = {
     // the scored projection is consumed three times (histogram, corpus

@@ -93,9 +93,9 @@ object Dedup {
     * candidate-growth guarantee — only remove repeated base work
     * (Round10PropertySpec pins derived == direct on each layer).
     */
-  private val posBaseCache = new graft.SessionMemo[DataFrame]
-  private val tfBaseCache = new graft.SessionMemo[DataFrame]
-  private val arraysCache = new graft.SessionMemo[DataFrame]
+  private val posBaseCache = new graft.FrameMemo
+  private val tfBaseCache = new graft.FrameMemo
+  private val arraysCache = new graft.FrameMemo
 
   private[graft] def positionalBase(s: SparkSession, dir: String): DataFrame =
     posBaseCache.getOrElseUpdate(s, dir) {
@@ -105,7 +105,6 @@ object Dedup {
           posexplode(call_function("shingle_hashes_5", split(col("text"), " ")))
             .as(Seq("pos", "g")))
         .select(col("doc_id"), col("pos").cast("long").as("pos"), col("g"))
-        .localCheckpoint()
     }
 
   /** Multiset 5-gram postings (doc_id, sh, tf). One row per (doc,
@@ -130,7 +129,6 @@ object Dedup {
           explode(call_function("shingle_hashes_5", split(col("text"), " ")))
             .as("sh"))
         .groupBy("doc_id", "sh").agg(count(lit(1)).as("tf"))
-        .localCheckpoint()
     }
 
   /** Per-doc DISTINCT shingle sets as arrays — the verify-side form
@@ -144,7 +142,6 @@ object Dedup {
     arraysCache.getOrElseUpdate(s, dir) {
       tfBase(s, dir).groupBy("doc_id")
         .agg(collect_list(col("sh")).as("sh"))
-        .localCheckpoint()
     }
 
   /** Df-capped distinct-set postings (doc_id, s) for the self-join family,
@@ -229,17 +226,15 @@ FROM documents GROUP BY md5(nfc_normalize(text)) ORDER BY kept_doc_id
     * (pair report, cluster consolidation, curated corpus, curation report,
     * corpus build) — a production run materializes it ONCE and every stage
     * reads it. Mirrored here with a session-scoped memo: first use
-    * persists the (tiny, LSH-bounded) result, later pipelines reuse the
-    * cached blocks instead of re-running the inverted-index join.
-    * [[SessionMemo]] holds the per-session map softly, so the blocks (and
-    * the session they reference) are reclaimable rather than JVM-pinned.
+    * checkpoints the (tiny, LSH-bounded) result, later pipelines reuse its
+    * blocks instead of re-running the inverted-index join.
     */
-  private val pairsCache = new graft.SessionMemo[DataFrame]
+  private val pairsCache = new graft.FrameMemo
 
   def jaccardPairs(s: SparkSession, dir: String): DataFrame =
     pairsCache.getOrElseUpdate(s, dir) {
       val ex = cappedSetPostings(s, dir)
-      jaccardFromCandidates(ex, candidatesFromIndex(ex)).persist()
+      jaccardFromCandidates(ex, candidatesFromIndex(ex))
     }
 
   /** Candidate-pair count over the capped universe — the
@@ -376,7 +371,7 @@ ORDER BY i, j
       .distinct()
   }
 
-  private val prefixCache = new graft.SessionMemo[DataFrame]
+  private val prefixCache = new graft.FrameMemo
 
   /** The (s, dir)-memoized candidate set — the prefix pipeline lacked the
     * session-memo discipline every sibling base in this file has, so each
@@ -386,7 +381,7 @@ ORDER BY i, j
     */
   private[graft] def prefixCandidatesAt(s: SparkSession, dir: String): DataFrame =
     prefixCache.getOrElseUpdate(s, dir) {
-      prefixCandidates(shingleArrays(s, dir)).localCheckpoint()
+      prefixCandidates(shingleArrays(s, dir))
     }
 
   /** Naive uncapped exact-Jaccard oracle — deliberately NOT the prefix
@@ -438,7 +433,7 @@ ORDER BY i, j
     * (m_{2b}, m_{2b+1}) row pair. Shared by the self-join LSH and the
     * incremental (new×corpus) variant.
     */
-  private val bandsCache = new graft.SessionMemo[DataFrame]
+  private val bandsCache = new graft.FrameMemo
 
   /** Band keys over an ARBITRARY (doc_id, text) frame — the signature
     * construction itself, shared by the memoized corpus index below and by
@@ -463,14 +458,11 @@ ORDER BY i, j
   }
 
   private def minhashBands(s: SparkSession, dir: String): DataFrame =
-    bandsCache.getOrElseUpdate(s, dir) {
-      bandKeysOf(docs(s, dir))
-        // memoized + checkpointed (shared-base discipline): the self-join
-        // LSH puts this plan on BOTH join sides and the incremental
-        // variant on both of its sides too — without the cut the text
-        // scan + 32-hash signature pass runs twice per query
-        .localCheckpoint()
-    }
+    // memoized + checkpointed (shared-base discipline): the self-join
+    // LSH puts this plan on BOTH join sides and the incremental variant on
+    // both of its sides too — without the cut the text scan + 32-hash
+    // signature pass runs twice per query
+    bandsCache.getOrElseUpdate(s, dir)(bandKeysOf(docs(s, dir)))
 
   /** Distinct shingle sets over an ARBITRARY (doc_id, text) frame — the
     * per-batch form of [[shingleArrays]] for frames outside the memoized
@@ -879,7 +871,7 @@ ORDER BY i, j
     * classes. Session-memoized: the three collapsed twins, the cluster
     * family, and any curation pipeline read one materialization.
     */
-  private val setMembersCache = new graft.SessionMemo[DataFrame]
+  private val setMembersCache = new graft.FrameMemo
 
   /** NARROW member map (doc_id, sid, m) — the key is dropped before the
     * checkpoint on purpose: the map is corpus-long, and consumers
@@ -898,7 +890,6 @@ ORDER BY i, j
         .withColumn("sid", min("doc_id").over(w))
         .withColumn("m", count(lit(1)).over(w))
         .select("doc_id", "sid", "m")
-        .localCheckpoint()
     }
 
   /** One row per class (key, sid, m) — SURVIVOR-count-sized, so it gets
@@ -906,7 +897,7 @@ ORDER BY i, j
     * candidates, intra eligibility) re-scans this instead of anything
     * corpus-long.
     */
-  private val setClassesCache = new graft.SessionMemo[DataFrame]
+  private val setClassesCache = new graft.FrameMemo
 
   private[graft] def setClasses(s: SparkSession, dir: String): DataFrame =
     setClassesCache.getOrElseUpdate(s, dir) {
@@ -915,7 +906,6 @@ ORDER BY i, j
           .select(col("sid"), col("m")),
           col("doc_id") === col("sid"))
         .select(sort_array(col("sh")).as("key"), col("sid"), col("m"))
-        .localCheckpoint()
     }
 
   /** Weighted stop-shingle cap over survivor postings carrying a class
@@ -948,7 +938,7 @@ ORDER BY i, j
     * (each carried ~47 Exchanges pre-fix). Survivor-sized, so the pinned
     * blocks stay far below any posting-family base.
     */
-  private val survivorPostingsCache = new graft.SessionMemo[DataFrame]
+  private val survivorPostingsCache = new graft.FrameMemo
 
   private[graft] def survivorSetPostings(s: SparkSession, dir: String): DataFrame =
     survivorPostingsCache.getOrElseUpdate(s, dir) {
@@ -956,7 +946,6 @@ ORDER BY i, j
         setClasses(s, dir).select(col("sid").as("doc_id"), col("m"),
           explode(col("key")).as("s")),
         "s")
-        .localCheckpoint()
     }
 
   /** Capped set size + multiplicity per survivor; a class whose whole set
@@ -972,7 +961,7 @@ ORDER BY i, j
     * member-weighted, `jaccard` here equals the member-level pair query's
     * value for every (a ∈ class i) × (b ∈ class j) pair on ANY corpus.
     */
-  private val survivorCrossCache = new graft.SessionMemo[DataFrame]
+  private val survivorCrossCache = new graft.FrameMemo
 
   private[graft] def survivorJaccardCross(s: SparkSession, dir: String): DataFrame =
     survivorCrossCache.getOrElseUpdate(s, dir) {
@@ -993,7 +982,6 @@ ORDER BY i, j
             (col("sa.n") + col("sb.n") - col("inter"))).as("jaccard"),
           col("sa.m").as("mi"), col("sb.m").as("mj"))
         .filter(col("jaccard") >= 0.8)
-        .localCheckpoint()
     }
 
   /** Survivors whose class has ≥ 2 members and a non-empty capped set —
@@ -1015,7 +1003,7 @@ ORDER BY i, j
     * (cosine is tf-weighted, so set-identical docs with different repeat
     * counts must NOT merge).
     */
-  private val multisetClassCache = new graft.SessionMemo[DataFrame]
+  private val multisetClassCache = new graft.FrameMemo
 
   private[graft] def multisetClasses(s: SparkSession, dir: String): DataFrame =
     multisetClassCache.getOrElseUpdate(s, dir) {
@@ -1024,7 +1012,6 @@ ORDER BY i, j
         .agg(sort_array(collect_list(struct(col("sh"), col("tf")))).as("key"))
         .groupBy("key")
         .agg(min("doc_id").as("sid"), count(lit(1)).as("m"))
-        .localCheckpoint()
     }
 
   /** Survivor-collapsed twin of [[jaccardPairs]] (r12 verdict #5): the
@@ -1337,7 +1324,8 @@ ORDER BY doc_id
     * may repeat within one doc); the base is memo-checkpointed, so the
     * stop aggregate and both self-join sides read materialized rows.
     */
-  private def positionalPostings(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def positionalPostings(s: SparkSession, dir: String)
+      : DataFrame = {
     val g = positionalBase(s, dir)
     val stop = g.groupBy("g").agg(countDistinct("doc_id").as("df"))
       .filter(col("df") > PostingDfCap).select("g")
@@ -1359,29 +1347,32 @@ ORDER BY doc_id
     * intermediate of both substring queries, session-memoized like the
     * Jaccard pair list.
     */
-  private val spansCache = new graft.SessionMemo[DataFrame]
+  private val spansCache = new graft.FrameMemo
 
   private[graft] def substringSpans(s: SparkSession, dir: String): DataFrame =
-    spansCache.getOrElseUpdate(s, dir) {
-      import org.apache.spark.sql.expressions.Window
-      val ex = positionalPostings(s, dir)
-      val cand = ex.as("a")
-        .join(ex.as("b"),
-          col("a.g") === col("b.g") && col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("i"), col("b.doc_id").as("j"),
-          col("a.pos").as("pi"), col("b.pos").as("pj"),
-          (col("a.pos") - col("b.pos")).as("diag"))
-      val w = Window.partitionBy("i", "j", "diag").orderBy("pi")
-      cand
-        .withColumn("isl", col("pi") - row_number().over(w))
-        .groupBy("i", "j", "diag", "isl")
-        .agg(count(lit(1)).as("run"),
-          min("pi").as("start_i"), min("pj").as("start_j"))
-        .select(col("i"), col("j"), col("start_i"), col("start_j"),
-          (col("run") + lit(4L)).as("span_tokens"))
-        .filter(col("span_tokens") >= MinSpanTokens)
-        .persist()
-    }
+    spansCache.getOrElseUpdate(s, dir)(spansOf(positionalPostings(s, dir)))
+
+  /** The spans over a positional posting list (doc_id, pos, g), unmemoized
+    * (PlanSpec inspects its plan).
+    */
+  private[graft] def spansOf(ex: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val cand = ex.as("a")
+      .join(ex.as("b"),
+        col("a.g") === col("b.g") && col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("i"), col("b.doc_id").as("j"),
+        col("a.pos").as("pi"), col("b.pos").as("pj"),
+        (col("a.pos") - col("b.pos")).as("diag"))
+    val w = Window.partitionBy("i", "j", "diag").orderBy("pi")
+    cand
+      .withColumn("isl", col("pi") - row_number().over(w))
+      .groupBy("i", "j", "diag", "isl")
+      .agg(count(lit(1)).as("run"),
+        min("pi").as("start_i"), min("pj").as("start_j"))
+      .select(col("i"), col("j"), col("start_i"), col("start_j"),
+        (col("run") + lit(4L)).as("span_tokens"))
+      .filter(col("span_tokens") >= MinSpanTokens)
+  }
 
   /** Per near-dup pair: longest shared verbatim run and how many disjoint
     * maximal runs clear the bound.

@@ -33,12 +33,10 @@ object DedupClusters {
     * component map, and without the memo every `canonicalPick` invocation
     * re-persisted/re-counted the pair set and re-ran union-find (measured
     * 9.8s vs 3.6s for `dedup_clusters` itself at sf0.1). The map is
-    * pair-set-bounded (tiny), so caching it is free; `localCheckpoint(true)`
-    * cuts lineage so reuse never replays the pair pipeline. [[SessionMemo]]
-    * holds the per-session map softly, so the memo (and the session it
-    * references) is reclaimable rather than JVM-pinned.
+    * pair-set-bounded (tiny), so caching it is free; the memo's checkpoint
+    * cuts lineage so reuse never replays the pair pipeline.
     */
-  private val clusterCache = new graft.SessionMemo[DataFrame]
+  private val clusterCache = new graft.FrameMemo
 
   /** Memoized `(doc_id, cluster_rep)` component map for the corpus at
     * `dir` — COLLAPSE-FIRST (r17): components run over the SURVIVOR
@@ -81,7 +79,6 @@ object DedupClusters {
       Dedup.setMembers(s, dir).select("doc_id", "sid")
         .join(repMap, "sid")
         .select("doc_id", "cluster_rep")
-        .localCheckpoint(true)
     }
 
   /** The definitional member-level form (components over the full pair
@@ -377,12 +374,12 @@ ORDER BY doc_id
     * measured that replay as the family's dominant, high-variance cost
     * (2.2-4.5s run to run); the memoized map makes reuse O(pair set).
     */
-  private val semClusterCache = new graft.SessionMemo[DataFrame]
+  private val semClusterCache = new graft.FrameMemo
 
   /** Memoized semantic component map for the corpus at `dir`. */
   private[graft] def semanticClusterMap(s: SparkSession, dir: String): DataFrame =
     semClusterCache.getOrElseUpdate(s, dir) {
-      connectedComponents(s, semanticPairs(s, dir)).localCheckpoint(true)
+      connectedComponents(s, semanticPairs(s, dir))
     }
 
   def semanticClusters(s: SparkSession, dir: String): DataFrame = {
@@ -548,12 +545,12 @@ ORDER BY e.vec_id
   /** Memoized survivor-component map — the collapsed twin of
     * [[semanticClusterMap]], same pair-set-bounded reuse rationale.
     */
-  private val semCollapsedClusterCache = new graft.SessionMemo[DataFrame]
+  private val semCollapsedClusterCache = new graft.FrameMemo
 
   private[graft] def semCollapsedClusterMap(s: SparkSession, dir: String)
       : DataFrame =
     semCollapsedClusterCache.getOrElseUpdate(s, dir) {
-      connectedComponents(s, semCollapsedPairs(s, dir)).localCheckpoint(true)
+      connectedComponents(s, semCollapsedPairs(s, dir))
     }
 
   /** Dedup-collapsed SEMANTIC dedup — [[semanticClusters]] with the

@@ -191,11 +191,9 @@ ORDER BY rank_scaled DESC, n_name
     * (triangles, link prediction, label propagation, k-core) consume the
     * identical ≤300-row edge build, so the fact scan + symmetrize +
     * threshold job runs ONCE per session instead of once per query (the
-    * `DedupClusters.clusterCache` pattern; [[SessionMemo]] holds the
-    * per-session map softly, so the memo and its session are reclaimable
-    * rather than JVM-pinned).
+    * `DedupClusters.clusterCache` pattern).
     */
-  private val edgeCache = new graft.SessionMemo[DataFrame]
+  private val edgeCache = new graft.FrameMemo
 
   private def thresholdedTradeEdges(s: SparkSession, dir: String): DataFrame =
     edgeCache.getOrElseUpdate(s, dir)(thresholdedTradeEdgesUncached(s, dir))
@@ -208,7 +206,7 @@ ORDER BY rank_scaled DESC, n_name
     * commute) derive from it, so the fact scan runs once per (session,
     * corpus) instead of once per entry-point. ≤ nation² = 625 rows out.
     */
-  private val directedCache = new graft.SessionMemo[DataFrame]
+  private val directedCache = new graft.FrameMemo
 
   private[graft] def directedTradeWeights(
       s: SparkSession, dir: String): DataFrame =
@@ -231,7 +229,6 @@ ORDER BY rank_scaled DESC, n_name
           col("o_custkey") === col("c_custkey")),
           col("l_orderkey") === col("o_orderkey"))
         .groupBy("u", "v").agg(sum("c").as("wc"))
-        .localCheckpoint() // lineage cut: fact scanned once per session
     }
 
   private def thresholdedTradeEdgesUncached(
@@ -245,7 +242,6 @@ ORDER BY rank_scaled DESC, n_name
     und.crossJoin(broadcast(tot))
       .filter(col("w") * col("ne") >= col("tw"))
       .select("a", "b")
-      .localCheckpoint() // consumed repeatedly by every downstream join
   }
 
   def triangleClustering(s: SparkSession, dir: String): DataFrame = {

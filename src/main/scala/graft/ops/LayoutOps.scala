@@ -309,7 +309,8 @@ FROM files GROUP BY source ORDER BY source
       .saveAsTable(name)
   }
 
-  private val bucketedCache = new graft.SessionMemo[(DataFrame, DataFrame)]
+  /** The two bucketed tables' catalog names, per (session, corpus). */
+  private val bucketedCache = new graft.SessionMemo[(String, String)]
 
   private def deleteRecursively(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
@@ -355,8 +356,8 @@ FROM files GROUP BY source ORDER BY source
   }
 
   private[graft] def bucketedOrderkeyTables(
-      s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    bucketedCache.getOrElseUpdate(s, dir) {
+      s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val (li, ord) = bucketedCache.getOrElseUpdate(s, dir) {
       prepareBucketedConfs(s)
       // Tag includes the PID: the layout is an external-path catalog table,
       // and two JVMs pointed at the same corpus (e.g. a Verify gate and a
@@ -387,8 +388,10 @@ FROM files GROUP BY source ORDER BY source
             "o_orderkey", "l_orderkey"),
           "l_orderkey", nb, s"$base/orders", oName)
       }
-      (s.table(liName), s.table(oName))
+      (liName, oName)
     }
+    (s.table(li), s.table(ord))
+  }
 
   /** The `join_priority_shipping` aggregation on the bucketed layout: per
     * orderkey lineitem partials (ZERO exchange — bucketing pre-satisfies

@@ -217,7 +217,7 @@ FROM documents ORDER BY doc_id
     * start from the same codec-seam pass, so it decodes once per
     * (session, corpus). Tiny 2-column result, checkpointed.
     */
-  private val phashCache = new graft.SessionMemo[DataFrame]
+  private val phashCache = new graft.FrameMemo
 
   private[graft] def phashSigs(s: SparkSession, dir: String): DataFrame =
     phashCache.getOrElseUpdate(s, dir) {
@@ -227,7 +227,7 @@ FROM documents ORDER BY doc_id
         .as[(Long, Array[Byte])]
       ds.mapPartitions(_.map { case (id, bytes) =>
         (id, sig60(bytes, 0, bytes.length))
-      }).toDF("doc_id", "phash").localCheckpoint()
+      }).toDF("doc_id", "phash")
     }
 
   def mediaPhash(s: SparkSession, dir: String): DataFrame =

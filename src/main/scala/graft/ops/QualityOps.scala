@@ -19,7 +19,7 @@ object QualityOps {
     * monitor's own statistics are untouched — the hash gate and a
     * Round10PropertySpec law pin it).
     */
-  private val dailyCache = new graft.SessionMemo[DataFrame]
+  private val dailyCache = new graft.FrameMemo
 
   private[graft] def dailyEventCounts(
       s: SparkSession, dir: String): DataFrame =
@@ -27,7 +27,6 @@ object QualityOps {
       Registry.events(s, dir)
         .groupBy(col("event_type"), to_date(col("ts")).as("day"))
         .agg(count(lit(1)).as("n_events"))
-        .localCheckpoint()
     }
 
   // ------------------------------------------------------- column profile

@@ -127,7 +127,7 @@ LIMIT 20
     * in TakeOrdered top-k; the fusion join touches 40 rows — the windows
     * that assign ranks see ONLY those top-k rows.
     */
-  private val denseTopCache = new graft.SessionMemo[DataFrame]
+  private val denseTopCache = new graft.FrameMemo
 
   /** Exact-cosine top-20 candidates vs probe vector 0 — the dense arm
     * [[hybridRrf]] and [[mmrRerank]] share (each hand-copied the scored
@@ -146,7 +146,6 @@ LIMIT 20
           Similarity.cosine(col("qv"), col("pq"), col("nrm"), col("pn"))
             .as("rel"))
         .orderBy(col("rel").desc, col("vec_id").asc).limit(20)
-        .localCheckpoint()
     }
 
   def hybridRrf(s: SparkSession, dir: String): DataFrame = {

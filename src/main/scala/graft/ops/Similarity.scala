@@ -37,7 +37,7 @@ object Similarity {
     * complete, so no consumer's pruning/candidate bound changes; a
     * Round10PropertySpec law pins derived == direct plus the memo hit.
     */
-  private val quantizedCache = new graft.SessionMemo[DataFrame]
+  private val quantizedCache = new graft.FrameMemo
 
   /** The quantization kernel: float coordinate → fixed-point long on the
     * 1e-6 grid. ONE definition shared by the batch base ([[quantized]])
@@ -63,7 +63,6 @@ object Similarity {
           .as("q8"))
         .withColumn("nrm",
           call_function("vec_dot_long", col("qv"), col("qv")))
-        .localCheckpoint()
     }
 
   /** Exact quantized cosine via the codegen'd int64 dot kernel
@@ -1248,7 +1247,7 @@ FROM ranked WHERE rank <= $KnnK ORDER BY vec_id, rank
     * dup-heavy ingestion session runs many queries over the SAME collapsed
     * corpus, and the collapse is one full-corpus shuffle worth reusing.
     */
-  private val collapsedCache = new graft.SessionMemo[DataFrame]
+  private val collapsedCache = new graft.FrameMemo
 
   private[graft] def collapsed(s: SparkSession, dir: String): DataFrame =
     collapsedCache.getOrElseUpdate(s, dir) {
@@ -1256,7 +1255,6 @@ FROM ranked WHERE rank <= $KnnK ORDER BY vec_id, rank
       quantized(s, dir).groupBy("qv")
         .agg(min("vec_id").as("vec_id"), count(lit(1)).as("m"),
           min("nrm").as("nrm"))
-        .localCheckpoint() // corpus, seeds, and both scoring sides read it
     }
 
   def knnJoinDedup(s: SparkSession, dir: String): DataFrame = {

@@ -31,7 +31,7 @@ object TextOps {
     * stop-term discipline changes; a Round10PropertySpec law pins
     * derived == direct plus the memo hit.
     */
-  private val termTfCache = new graft.SessionMemo[DataFrame]
+  private val termTfCache = new graft.FrameMemo
 
   private[graft] def termTf(s: SparkSession, dir: String): DataFrame =
     termTfCache.getOrElseUpdate(s, dir) {
@@ -43,7 +43,6 @@ object TextOps {
         .select(col("doc_id"),
           explode(call_function("ascii_words", col("text"))).as("term"))
         .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-        .localCheckpoint()
     }
 
   /** Greedy ≤4-char chunking — a deterministic stand-in for BPE-style
@@ -607,26 +606,21 @@ LIMIT 20
     * cases) is property-tested against a direct list-walk reference in
     * Round6PropertySpec.
     */
-  /** Session-scoped memo for the learned merge rules + rewritten corpus:
-    * training (`vocab_bpe_merges`) and application (`vocab_bpe_apply`)
-    * consume the same chain, and the rules are eager 1-row
-    * `localCheckpoint` barriers — without the memo each query re-runs the
-    * three corpus-counting jobs per invocation. Same pattern as
-    * `Dedup.pairsCache`; [[SessionMemo]] holds the per-session map softly,
-    * so the memo and its session are reclaimable rather than JVM-pinned.
+  /** Session-scoped memo for the three learned merge rules (1-row frames,
+    * keyed by corpus and step): training (`vocab_bpe_merges`) and
+    * application (`vocab_bpe_apply`) consume the same chain, and without
+    * the memo each query re-runs the three corpus-counting jobs.
     */
-  private val bpeCache = new graft.SessionMemo[(Seq[DataFrame], Seq[DataFrame])]
-
-  private def bpeChain(s: SparkSession, dir: String)
-      : (Seq[DataFrame], Seq[DataFrame]) =
-    bpeCache.getOrElseUpdate(s, dir)(bpeChainUncached(s, dir))
+  private val bpeRuleCache = new graft.FrameMemo
 
   /** The shared 3-iteration training chain: returns the three 1-row merge
     * rules and the corpus after EVERY stage (c0..c3, with `source` and the
     * pre-merge token count carried through) — the apply audit reads the
-    * last, the compression curve reads all four.
+    * last, the compression curve reads all four. Only the rules run jobs,
+    * once per session; the corpus stages are plans over them, rebuilt on
+    * every call.
     */
-  private def bpeChainUncached(s: SparkSession, dir: String)
+  private def bpeChain(s: SparkSession, dir: String)
       : (Seq[DataFrame], Seq[DataFrame]) = {
     graft.functions.VectorFunctions.register(s)
     val toks = call_function("ascii_words", col("text"))
@@ -640,30 +634,30 @@ LIMIT 20
     val c0 = docs(s, dir)
       .select(col("source"), size(toks).cast("long").as("n0"),
         concat(lit("|"), array_join(toks, "||"), lit("|")).as("s"))
-    def topPair(c: DataFrame): DataFrame = {
-      val t = split(expr("trim(BOTH '|' FROM s)"), "\\|\\|")
-      c.select(t.as("t"))
-        .filter(size(col("t")) >= 2)
-        .select(explode(transform(sequence(lit(1), size(col("t")) - 1),
-          i => struct(element_at(col("t"), i).as("x"),
-            element_at(col("t"), i + 1).as("y")))).as("p"))
-        .groupBy(col("p.x").as("x"), col("p.y").as("y"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("x").asc, col("y").asc)
-        .limit(1)
-        .localCheckpoint()
-    }
+    def topPair(c: DataFrame, step: Int): DataFrame =
+      bpeRuleCache.getOrElseUpdate(s, s"$dir#$step") {
+        val t = split(expr("trim(BOTH '|' FROM s)"), "\\|\\|")
+        c.select(t.as("t"))
+          .filter(size(col("t")) >= 2)
+          .select(explode(transform(sequence(lit(1), size(col("t")) - 1),
+            i => struct(element_at(col("t"), i).as("x"),
+              element_at(col("t"), i + 1).as("y")))).as("p"))
+          .groupBy(col("p.x").as("x"), col("p.y").as("y"))
+          .agg(count(lit(1)).as("n"))
+          .orderBy(col("n").desc, col("x").asc, col("y").asc)
+          .limit(1)
+      }
     def applyMerge(c: DataFrame, m: DataFrame): DataFrame =
       c.crossJoin(broadcast(m))
         .select(col("source"), col("n0"),
           call_function("replace", col("s"),
             concat(lit("|"), col("x"), lit("||"), col("y"), lit("|")),
             concat(lit("|"), col("x"), lit(" "), col("y"), lit("|"))).as("s"))
-    val m1 = topPair(c0)
+    val m1 = topPair(c0, 1)
     val c1 = applyMerge(c0, m1)
-    val m2 = topPair(c1)
+    val m2 = topPair(c1, 2)
     val c2 = applyMerge(c1, m2)
-    val m3 = topPair(c2)
+    val m3 = topPair(c2, 3)
     (Seq(m1, m2, m3), Seq(c0, c1, c2, applyMerge(c2, m3)))
   }
 
@@ -1035,7 +1029,7 @@ ORDER BY doc_id, rk
     */
   private[graft] val UnigramTopK = 40
 
-  private val unigramCache = new graft.SessionMemo[DataFrame]
+  private val unigramCache = new graft.FrameMemo
 
   /** Distinct words with corpus counts — one grouped sum over the memoized
     * [[termTf]] postings (Σ tf over docs == the raw occurrence count).
@@ -1097,7 +1091,6 @@ ORDER BY doc_id, rk
         .select(col("w").as("word"), col("c"), walk.as("r"))
         .select(col("word"), col("c"), col("r.k").as("n_pieces"),
           col("r.seg").as("segmentation"))
-        .localCheckpoint()
     }
 
   def unigramSegment(s: SparkSession, dir: String): DataFrame =

@@ -46,10 +46,10 @@ object TimeSeriesOps {
     * dedup posting bases), so no consumer's semantics can change — pinned
     * by the memo-vs-direct law in OptR14Spec.
     */
-  private val dailyCache = new graft.SessionMemo[DataFrame]
+  private val dailyCache = new graft.FrameMemo
 
   private[graft] def daily(s: SparkSession, dir: String): DataFrame =
-    dailyCache.getOrElseUpdate(s, dir)(dailyUncached(s, dir).localCheckpoint())
+    dailyCache.getOrElseUpdate(s, dir)(dailyUncached(s, dir))
 
   private[graft] def dailyUncached(s: SparkSession, dir: String): DataFrame =
     Registry.events(s, dir)

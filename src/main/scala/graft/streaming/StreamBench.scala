@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.{GraftSession, SessionMemo}
+import graft.GraftSession
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.functions._
 
@@ -36,7 +36,6 @@ object StreamBench {
   }
 
   def main(args: Array[String]): Unit = {
-    SessionMemo.pinSessions = true // single-session process
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)

@@ -1,6 +1,11 @@
 package org.apache.spark.sql
 
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Attribute, ExpressionSet, SortOrder}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Statistics}
+import org.apache.spark.sql.catalyst.plans.physical.Partitioning
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Bridge into Spark's `private[sql]` plan→Dataset constructor, the standard
   * technique third-party Catalyst extensions (Sedona, Delta, …) use to
@@ -23,4 +28,15 @@ object GraftSqlBridge {
     */
   def column(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
     classic.ExpressionUtils.column(e)
+
+  /** A frame over already-materialized rows: one `LogicalRDD` leaf bound to
+    * `spark`. The attributes keep their ids, so a plan over it is the plan
+    * over the frame the rows were checkpointed from.
+    */
+  def ofRdd(spark: SparkSession, output: Seq[Attribute],
+      rdd: RDD[InternalRow], partitioning: Partitioning,
+      ordering: Seq[SortOrder], stats: Statistics,
+      constraints: ExpressionSet): DataFrame =
+    ofRows(spark, LogicalRDD(output, rdd, partitioning, ordering)(
+      spark.asInstanceOf[classic.SparkSession], Some(stats), Some(constraints)))
 }

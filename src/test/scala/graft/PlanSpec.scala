@@ -414,7 +414,8 @@ class PlanSpec extends SparkSpec {
     // access is the n_chars projection)
     val m1 = ops.DedupClusters.clusterMap(spark, sfDir)
     val m2 = ops.DedupClusters.clusterMap(spark, sfDir)
-    assert(m1 eq m2, "cluster map not memoized - union-find re-runs per call")
+    assert(sameCheckpoint(m1, m2),
+      "cluster map not memoized - union-find re-runs per call")
     val plan = executedPlan(ops.DedupClusters.canonicalPick(spark, sfDir))
     assert(!plan.contains("shingle_hashes"),
       s"canonical pick replays the shingle pipeline:\n${plan.take(2000)}")
@@ -650,8 +651,11 @@ class PlanSpec extends SparkSpec {
     // exact-substring dedup must stay O(co-occurring seeds): candidates
     // come from the positional posting self-join on the gram hash, and
     // the islands window partitions by (i, j, diag) — a global window or
-    // a non-equi join here is an all-pairs pass at corpus scale
-    val plan = executedPlan(ops.Dedup.substringSpanPairs(spark, sfDir))
+    // a non-equi join here is an all-pairs pass at corpus scale. The spans
+    // are session-memoized, so inspect their plan directly — the memoized
+    // query plan would only show checkpointed rows
+    val plan = executedPlan(
+      ops.Dedup.spansOf(ops.Dedup.positionalPostings(spark, sfDir)))
     assert(!plan.contains("CartesianProduct") &&
       !plan.contains("BroadcastNestedLoopJoin"),
       s"substring candidates degraded to an all-pairs join:\n${plan.take(2000)}")

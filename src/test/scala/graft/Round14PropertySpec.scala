@@ -122,169 +122,6 @@ class Round14PropertySpec extends SparkSpec {
         s"only-naive=${(expected -- got).take(3)}")
   }
 
-  // --------------- SessionMemo budget eviction (r10 verdict item 2) -----
-  private def ckpt(n: Long): org.apache.spark.sql.DataFrame =
-    spark.range(n).toDF("id").localCheckpoint()
-
-  test("enforceBudget evicts LRU-first, frees blocks, and recompute works") {
-    val memo = new SessionMemo[org.apache.spark.sql.DataFrame]
-    // start from a clean slate for THIS session so LRU order is ours alone
-    SessionMemo.enforceBudget(spark, 0L)
-    var builds = 0
-    def get(key: String, n: Long) = memo.getOrElseUpdate(spark, key) {
-      builds += 1; ckpt(n)
-    }
-    val a = get("a", 10000)
-    val b = get("b", 10000)
-    get("a", 10000) // touch a: b becomes LRU-oldest
-    val idsA = SessionMemo.referencedRdds(a).map(_.id).toSet
-    val idsB = SessionMemo.referencedRdds(b).map(_.id).toSet
-    assert(idsA.nonEmpty && idsB.nonEmpty && (idsA & idsB).isEmpty)
-    def persisted(): Set[Int] =
-      spark.sparkContext.getPersistentRDDs.keySet.toSet
-    assert(idsA.subsetOf(persisted()) && idsB.subsetOf(persisted()))
-    val sizes = spark.sparkContext.getRDDStorageInfo
-      .map(i => i.id -> (i.memSize + i.diskSize)).toMap
-    val bytesA = idsA.toSeq.map(sizes.getOrElse(_, 0L)).sum
-    assert(bytesA > 0, "checkpointed blocks should have measurable size")
-    // budget = just a's bytes -> exactly the LRU-oldest (b) is evicted
-    val ev1 = SessionMemo.enforceBudget(spark, bytesA)
-    assert(ev1 === Seq("b"), s"expected LRU eviction of b, got $ev1")
-    assert(idsA.subsetOf(persisted()), "a's blocks must survive")
-    assert((idsB & persisted()).isEmpty, "b's blocks must be unpersisted")
-    // evicted entry recomputes on next touch; survivor stays a hit
-    assert(builds === 2)
-    get("b", 10000)
-    assert(builds === 3, "evicted entry must recompute")
-    get("a", 10000)
-    assert(builds === 3, "survivor must still be a memo hit")
-    SessionMemo.enforceBudget(spark, 0L) // leave no blocks behind
-    assert((idsA & persisted()).isEmpty)
-  }
-
-  test("enforceBudget keeps blocks a surviving entry still references") {
-    val memo = new SessionMemo[org.apache.spark.sql.DataFrame]
-    SessionMemo.enforceBudget(spark, 0L)
-    val base = memo.getOrElseUpdate(spark, "base")(ckpt(20000))
-    // derived value NOT checkpointed itself: its plan still reads base's
-    // checkpoint RDD — the persist()-style memo shape (Dedup.pairsCache).
-    // Touch order makes derived LRU-OLDEST and base NEWEST.
-    val derived = memo.getOrElseUpdate(spark, "derived") {
-      val d = base.filter(org.apache.spark.sql.functions.col("id") % 2 === 0)
-      d.persist(); d.count(); d
-    }
-    val fat = memo.getOrElseUpdate(spark, "fat")(ckpt(30000))
-    memo.getOrElseUpdate(spark, "base")(fail("must be a hit")) // base newest
-    assert(SessionMemo.referencedRdds(derived).map(_.id).toSet ===
-      SessionMemo.referencedRdds(base).map(_.id).toSet,
-      "the persist()-style value must reference exactly the base blocks")
-    val baseIds = SessionMemo.referencedRdds(base).map(_.id).toSet
-    val fatIds = SessionMemo.referencedRdds(fat).map(_.id).toSet
-    def persisted(): Set[Int] =
-      spark.sparkContext.getPersistentRDDs.keySet.toSet
-    val sizes = spark.sparkContext.getRDDStorageInfo
-      .map(i => i.id -> (i.memSize + i.diskSize)).toMap
-    val baseBytes = baseIds.toSeq.map(sizes.getOrElse(_, 0L)).sum
-    // budget = base's bytes: evicts derived (whose blocks are base's and
-    // must SURVIVE — base still references them), then fat (frees its
-    // bytes, landing on budget), then stops with base intact
-    val ev = SessionMemo.enforceBudget(spark, baseBytes)
-    assert(ev === Seq("derived", "fat"), s"unexpected eviction order: $ev")
-    assert(baseIds.subsetOf(persisted()),
-      "blocks shared with the surviving base entry must not be unpersisted")
-    assert((fatIds & persisted()).isEmpty, "fat's blocks must be freed")
-    // the survivor still reads correctly from its intact checkpoint
-    assert(memo.getOrElseUpdate(spark, "base")(fail("must be a hit"))
-      .count() === 20000L)
-    SessionMemo.enforceBudget(spark, 0L)
-    assert((baseIds & persisted()).isEmpty,
-      "once the last referencing entry is evicted the blocks must go")
-  }
-
-  test("enforceBudget counts persist()-style cached bytes toward the budget") {
-    // ADVICE r11 (medium): referencedRdds sees only LogicalRDD leaves, so a
-    // persisted-but-never-checkpointed memo value was attributed 0 bytes —
-    // a session of such entries could exceed the budget forever without an
-    // eviction firing. cachedBufferRdds closes that: the InMemoryRelation
-    // column buffers count, and the LRU loop can evict them.
-    val memo = new SessionMemo[org.apache.spark.sql.DataFrame]
-    SessionMemo.enforceBudget(spark, 0L)
-    val pOld = memo.getOrElseUpdate(spark, "pOld") {
-      val d = spark.range(40000).toDF("id")
-        .select(org.apache.spark.sql.functions.col("id"),
-          (org.apache.spark.sql.functions.col("id") * 2).as("v"))
-      d.persist(); d.count(); d
-    }
-    val pNew = memo.getOrElseUpdate(spark, "pNew") {
-      val d = spark.range(40000).toDF("id")
-        .select(org.apache.spark.sql.functions.col("id"),
-          (org.apache.spark.sql.functions.col("id") * 3).as("w"))
-      d.persist(); d.count(); d
-    }
-    assert(SessionMemo.referencedRdds(pOld).isEmpty,
-      "persist()-style values have no checkpoint RDDs — the blind spot")
-    val idsOld = SessionMemo.cachedBufferRdds(pOld).map(_.id).toSet
-    val idsNew = SessionMemo.cachedBufferRdds(pNew).map(_.id).toSet
-    assert(idsOld.nonEmpty && idsNew.nonEmpty && (idsOld & idsNew).isEmpty)
-    val sizes = spark.sparkContext.getRDDStorageInfo
-      .map(i => i.id -> (i.memSize + i.diskSize)).toMap
-    val bytesNew = idsNew.toSeq.map(sizes.getOrElse(_, 0L)).sum
-    assert(bytesNew > 0, "cached column buffers must have measurable size")
-    // budget = pNew's bytes: the LRU-oldest persist()-style entry must be
-    // seen, evicted, and its CacheManager blocks actually freed
-    val ev = SessionMemo.enforceBudget(spark, bytesNew)
-    assert(ev === Seq("pOld"), s"expected persist-style eviction, got $ev")
-    def persisted(): Set[Int] =
-      spark.sparkContext.getPersistentRDDs.keySet.toSet
-    assert((idsOld & persisted()).isEmpty, "pOld's cached blocks must free")
-    assert(idsNew.subsetOf(persisted()), "pNew's cached blocks must survive")
-    SessionMemo.enforceBudget(spark, 0L)
-    assert((idsNew & persisted()).isEmpty)
-  }
-
-  test("eviction keeps a CacheManager entry a surviving twin still holds") {
-    // ADVICE r11 (low): unpersist() drops the cache entry by plan
-    // sameResult — if a SURVIVING memo holds a semantically identical
-    // cached DataFrame, the shared blocks vanished under it (recompute
-    // kept answers right but violated the documented blocks-stay-intact
-    // guarantee). The eviction loop now share-checks the cached path too.
-    val memo = new SessionMemo[org.apache.spark.sql.DataFrame]
-    SessionMemo.enforceBudget(spark, 0L)
-    def samePlan() = spark.range(40000).toDF("id")
-      .select(org.apache.spark.sql.functions.col("id"),
-        (org.apache.spark.sql.functions.col("id") * 7).as("v"))
-    val twinA = memo.getOrElseUpdate(spark, "twinA") {
-      val d = samePlan(); d.persist(); d.count(); d
-    }
-    val mid = memo.getOrElseUpdate(spark, "mid")(ckpt(30000))
-    val twinB = memo.getOrElseUpdate(spark, "twinB") {
-      val d = samePlan(); d.persist(); d.count(); d
-    }
-    val cachedA = SessionMemo.cachedBufferRdds(twinA).map(_.id).toSet
-    val cachedB = SessionMemo.cachedBufferRdds(twinB).map(_.id).toSet
-    assert(cachedA === cachedB && cachedA.nonEmpty,
-      "sameResult twins must resolve to the SAME CacheManager blocks")
-    def persisted(): Set[Int] =
-      spark.sparkContext.getPersistentRDDs.keySet.toSet
-    val sizes = spark.sparkContext.getRDDStorageInfo
-      .map(i => i.id -> (i.memSize + i.diskSize)).toMap
-    val sharedBytes = cachedA.toSeq.map(sizes.getOrElse(_, 0L)).sum
-    assert(sharedBytes > 0)
-    // budget = shared bytes only: evicting twinA (LRU-oldest) frees
-    // NOTHING (twinB still holds the cache entry — the guarantee under
-    // test), so the loop must continue to mid, whose checkpoint frees the
-    // gap, and stop with twinB + the shared cache intact
-    val ev1 = SessionMemo.enforceBudget(spark, sharedBytes)
-    assert(ev1 === Seq("twinA", "mid"), s"unexpected eviction order: $ev1")
-    assert(cachedA.subsetOf(persisted()),
-      "the shared cache entry must survive while twinB references it")
-    assert(twinB.count() === 40000L)
-    assert(mid.columns.nonEmpty) // silence unused warning; mid is evicted
-    SessionMemo.enforceBudget(spark, 0L)
-    assert((cachedA & persisted()).isEmpty,
-      "once the last twin is evicted the shared blocks must go")
-  }
-
   test("knnJoinDedup on a dup-free corpus is knnJoin plus m=1 columns") {
     // sf0.001 embeddings are distinct in the quantized domain (500/500),
     // so the collapse is the identity there: the dedup-collapsed graph

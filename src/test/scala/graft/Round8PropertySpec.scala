@@ -51,26 +51,6 @@ class Round8PropertySpec extends SparkSpec {
       s"per-vector candidate count ${p2 / n2} exceeds the occupancy bound")
   }
 
-  test("SessionMemo computes once per key and keeps one map across pin-mode flips") {
-    // the r8 pinSessions path (Bench/Verify/StreamBench) must share the
-    // SAME inner map as the soft path — a split map would recompute
-    // entries built before the main set the flag, silently restoring the
-    // mid-suite recompute class the pin exists to kill
-    val memo = new SessionMemo[Int]
-    var computes = 0
-    def get(k: String): Int =
-      memo.getOrElseUpdate(spark, k) { computes += 1; computes }
-    assert(get("a") == 1 && get("a") == 1 && computes == 1)
-    val prev = SessionMemo.pinSessions
-    SessionMemo.pinSessions = true
-    try {
-      assert(get("a") == 1, "entry built before pinning must stay visible")
-      assert(get("b") == 2 && get("b") == 2 && computes == 2)
-    } finally SessionMemo.pinSessions = prev
-    assert(get("a") == 1 && get("b") == 2 && computes == 2,
-      "entries built while pinned must stay visible after unpinning")
-  }
-
   test("knn join on a scaled corpus still returns top-k per vector") {
     // end-to-end sanity at a post-knee size: every vector reports exactly
     // KnnK ranked neighbors (dense random corpus — no sparse-cell dropout)

@@ -280,25 +280,6 @@ class Round9PropertySpec extends SparkSpec {
         s"denormalized, got (size=${g.getLong(1)}, denorm=${g.getLong(2)})")
   }
 
-  test("unpinning SessionMemo drops every strong pin across instances") {
-    // the r8 ADVICE leak: pin → touch sessions → unpin used to leave the
-    // touched sessions strongly referenced forever. The setter now clears
-    // pins on flip-off (entries stay visible via the soft path).
-    val memo = new SessionMemo[Int]
-    val prev = SessionMemo.pinSessions
-    SessionMemo.pinSessions = true
-    try {
-      assert(memo.getOrElseUpdate(spark, "k")(7) == 7)
-      assert(memo.pinnedSessionCount == 1, "pin not recorded while flag on")
-    } finally SessionMemo.pinSessions = prev
-    if (!prev) {
-      assert(memo.pinnedSessionCount == 0,
-        "flipping pinSessions off must drop the strong pins")
-      assert(memo.getOrElseUpdate(spark, "k")(99) == 7,
-        "entry must remain visible through the soft path after unpin")
-    }
-  }
-
   test("prefix filter is boilerplate-immune WITHOUT a df cap, and complete") {
     // frequency-ordering must put the shared header shingle outside every
     // doc's prefix, so 1200 boilerplate docs yield ONLY the planted

@@ -59,6 +59,20 @@ trait SparkSpec extends AnyFunSuite {
     CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
   }
 
+  /** The id of the checkpoint RDD a memoized frame reads: its analyzed
+    * plan is one `LogicalRDD` leaf.
+    */
+  def checkpointRddId(df: org.apache.spark.sql.DataFrame): Int =
+    df.queryExecution.analyzed match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+      case p => fail(s"not a memoized frame:\n$p")
+    }
+
+  /** Whether two frames read the same memo entry's checkpoint. */
+  def sameCheckpoint(a: org.apache.spark.sql.DataFrame,
+      b: org.apache.spark.sql.DataFrame): Boolean =
+    checkpointRddId(a) == checkpointRddId(b)
+
   /** Spark jobs started while `body` runs. */
   def sparkJobsStartedBy(body: => Any): Int = sparkJobTasksStartedBy(body).size
 
