@@ -78,6 +78,9 @@ losers AS (
     AND i IN (SELECT doc_id FROM passing)
     AND j IN (SELECT doc_id FROM passing))"""
 
+  /** [[curatedCorpus]]'s passing docs with their set class `(doc_id, sid)`. */
+  private val passingMembersCache = new graft.FrameMemo
+
   /** Near-dup losers among PASSING docs: from each Jaccard ≥ 0.8 pair
     * whose members BOTH passed the per-doc filters, keep min(doc_id) —
     * the larger id is dropped. The passing restriction is load-bearing:
@@ -104,10 +107,13 @@ losers AS (
     //    b > min over adjacent A of pmin(A).
     // Everything is linear in distinct content; results are identical to
     // the definitional pair form on any corpus (Round17PropertySpec).
-    val members = Dedup.setMembers(s, dir).select("doc_id", "sid")
     // consumed three times below (pmin, intra losers, cross losers);
-    // narrow (doc_id, sid), so one materialization beats three re-joins
-    val pm = p.select("doc_id").join(members, "doc_id").localCheckpoint()
+    // narrow (doc_id, sid), so it is session-memoized rather than
+    // re-joined three times per plan
+    val pm = passingMembersCache.getOrElseUpdate(s, dir) {
+      p.select("doc_id")
+        .join(Dedup.setMembers(s, dir).select("doc_id", "sid"), "doc_id")
+    }
     val pmin = pm.groupBy("sid").agg(min("doc_id").as("pmin"))
     val edges = Dedup.survivorJaccardCross(s, dir).select("i", "j")
     val nmin = edges

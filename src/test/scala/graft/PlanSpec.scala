@@ -2,11 +2,18 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+  QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+import org.apache.spark.sql.execution.joins.{BaseJoinExec,
+  BroadcastNestedLoopJoinExec, CartesianProductExec, HashJoin,
+  SortMergeJoinExec}
 import org.apache.spark.sql.functions._
 
 /** Plan-quality regression tests: the physical plans the engine is designed
   * around must not silently degrade (SURVEY.md §4.3 / the 100 TB posture).
-  * These assert on the *executed* plan string, AQE included.
+  * These assert on the *executed* plan, AQE included: most on its string,
+  * newer laws on its final nodes ([[finalPlanNodes]]).
   */
 class PlanSpec extends SparkSpec {
 
@@ -15,6 +22,21 @@ class PlanSpec extends SparkSpec {
     // AdaptiveSparkPlan.toString prints final AND initial plans — keep only
     // the final one or exchange counts double
     df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
+  }
+
+  /** The nodes of `df`'s final physical plan, after running it: AQE's
+    * adaptive node and its query stages are read through, and a reused
+    * exchange is a leaf (its subtree runs once, where it first appears).
+    */
+  private def finalPlanNodes(df: DataFrame): Seq[SparkPlan] = {
+    df.collect()
+    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case s: QueryStageExec => walk(s.plan)
+      case r: ReusedExchangeExec => Seq(r)
+      case _ => p +: (p.children ++ p.subqueries).flatMap(walk)
+    }
+    walk(df.queryExecution.executedPlan)
   }
 
   /** PushedFilters/ReadSchema from the first parquet scan's metadata (the
@@ -450,16 +472,20 @@ class PlanSpec extends SparkSpec {
   }
 
   test("knn join candidates are cell-bucketed equi-joins, never vec×vec") {
-    val plan = executedPlan(ops.Similarity.knnJoin(spark, sfDir))
-    assert(!plan.contains("CartesianProduct"),
-      s"knn join grew a cartesian product:\n${plan.take(2000)}")
+    // knnJoin itself reads its assignment side from a memo checkpoint, so
+    // the law reads the two-level assignment that checkpoint is built from
+    val df = ops.Similarity.knnAssignments(spark, sfDir)
+    val joins = finalPlanNodes(df).collect { case j: BaseJoinExec => j }
+    def show = df.queryExecution.executedPlan.toString.take(2000)
+    assert(!joins.exists(_.isInstanceOf[CartesianProductExec]),
+      s"knn assignment grew a cartesian product:\n$show")
     // admissible nested loops: the two two-level fan-outs (fine-seeds ×
     // √cells coarse, corpus × √cells coarse — see ivfAssignTwoLevel)
-    assert("BroadcastNestedLoopJoin".r.findAllIn(plan).size <= 2,
-      s"corpus-level nested loop in knn join:\n${plan.take(2000)}")
-    assert(plan.contains("BroadcastHashJoin") || plan.contains("SortMergeJoin")
-      || plan.contains("ShuffledHashJoin"),
-      "knn candidate generation lost its equi-join")
+    val nested = joins.count(_.isInstanceOf[BroadcastNestedLoopJoinExec])
+    assert(nested <= 2, s"corpus-level nested loop in knn assignment:\n$show")
+    assert(joins.exists(j => j.isInstanceOf[HashJoin] ||
+      j.isInstanceOf[SortMergeJoinExec]),
+      s"knn assignment lost its fine-probe equi-join:\n$show")
   }
 
   test("triangle clustering iterates on the checkpointed edge list, not the fact table") {

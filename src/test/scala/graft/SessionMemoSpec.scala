@@ -18,9 +18,21 @@ class SessionMemoSpec extends SparkSpec {
   private val mixMemoQueries =
     Seq("ts_rsi14", "dedup_clusters", "curated_corpus", "ann_knn_join")
 
+  /** The queries whose per-call base is a memo of its own: the kNN family
+    * and curated_corpus.
+    */
+  private val annCurationQueries = Seq("ann_knn_join", "ann_knn_join_dedup",
+    "ann_knn_expand_members", "curated_corpus")
+
+  private def query(s: SparkSession, name: String): DataFrame =
+    Registry.all(name).fn(s, sfDir)
+
   private def runQuery(s: SparkSession, name: String): Unit =
-    Registry.all(name).fn(s, sfDir).write.format("noop").mode("overwrite")
-      .save()
+    query(s, name).write.format("noop").mode("overwrite").save()
+
+  /** A result's rows in a fixed order. */
+  private def rows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
 
   /** Runs `body` on its own thread; the thread is returned started. */
   private def onThread(body: => Unit): Thread = {
@@ -135,6 +147,35 @@ class SessionMemoSpec extends SparkSpec {
     }
     assert(jobs == 0, s"memo hit started $jobs Spark job(s)")
     assert(sameCheckpoint(first, hits(0)) && sameCheckpoint(firstMap, hits(1)))
+  }
+
+  test("a memo-warm kNN or curation query starts no Spark job and equals " +
+      "a memo-cold run") {
+    val faults = annCurationQueries.flatMap { name =>
+      val cold = rows(query(spark.newSession(), name))
+      val s = spark.newSession()
+      runQuery(s, name)
+      var warm: DataFrame = null
+      val jobs = sparkJobsStartedBy { warm = query(s, name) }
+      Seq(s"memo-warm $name started $jobs Spark job(s)" -> (jobs == 0),
+        s"memo-warm $name differs from memo-cold" -> (rows(warm) == cold))
+        .collect { case (fault, false) => fault }
+    }
+    assert(faults.isEmpty, faults.mkString("; "))
+  }
+
+  test("after eviction to a 1-byte budget the kNN and curation queries " +
+      "rebuild their bases and return their first results") {
+    val s = spark.newSession()
+    val first = annCurationQueries.map(n => rows(query(s, n)))
+    assert(SessionMemo.enforceBudget(s, 1L).nonEmpty)
+    for ((name, expected) <- annCurationQueries.zip(first)) {
+      var again: DataFrame = null
+      val jobs = sparkJobsStartedBy { again = query(s, name) }
+      assert(jobs > 0, s"$name was still a memo hit after eviction")
+      assert(rows(again) == expected, s"$name differs after eviction")
+    }
+    SessionMemo.enforceBudget(s, 0L) // leave no blocks behind
   }
 
   /** A session that ran the mix's memo consumers, then was dropped: only
