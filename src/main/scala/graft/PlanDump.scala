@@ -2,6 +2,12 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+  QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike,
+  ReusedExchangeExec, ShuffleExchangeLike}
+
 /** Optimization-round tooling: dump `.explain("formatted")` for named
   * registry queries to files (the before/after plan evidence the judge
   * checks claims against). Usage:
@@ -13,9 +19,34 @@ import java.nio.file.{Files, Paths}
   * the optional `exec` flag it first runs the query through the noop sink
   * (guide §1.4) and dumps the FINAL adaptive plan — the ground truth on AQE
   * join rewrites, coalescing, and query-stage reuse that the static plan
-  * cannot show.
+  * cannot show. Each query also prints its shuffle, broadcast and reused
+  * exchanges, counted on the nodes of the plan it dumps.
   */
 object PlanDump {
+
+  /** The nodes of a physical plan: AQE's adaptive node and its query
+    * stages are read through, and a reused exchange is a leaf (its subtree
+    * runs once, where it first appears). After the plan has run, this is
+    * its final plan.
+    */
+  def finalPlanNodes(plan: SparkPlan): Seq[SparkPlan] = plan match {
+    case a: AdaptiveSparkPlanExec => finalPlanNodes(a.executedPlan)
+    case s: QueryStageExec => finalPlanNodes(s.plan)
+    case r: ReusedExchangeExec => Seq(r)
+    case p => p +: (p.children ++ p.subqueries).flatMap(finalPlanNodes)
+  }
+
+  /** Shuffle, broadcast and reused exchanges among [[finalPlanNodes]]. */
+  final case class ExchangeCounts(shuffle: Int, broadcast: Int, reused: Int)
+
+  def exchangeCounts(plan: SparkPlan): ExchangeCounts = {
+    val nodes = finalPlanNodes(plan)
+    ExchangeCounts(
+      shuffle = nodes.count(_.isInstanceOf[ShuffleExchangeLike]),
+      broadcast = nodes.count(_.isInstanceOf[BroadcastExchangeLike]),
+      reused = nodes.count(_.isInstanceOf[ReusedExchangeExec]))
+  }
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, suffix, which) = args.take(4)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -45,8 +76,9 @@ object PlanDump {
             val plan = df.queryExecution.explainString(
               org.apache.spark.sql.execution.FormattedMode)
             Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"), plan)
-            val nEx = "Exchange".r.findAllIn(plan).size
-            println(s"[plandump] $name: exchanges=$nEx")
+            val ex = exchangeCounts(df.queryExecution.executedPlan)
+            println(s"[plandump] $name: shuffle_exchanges=${ex.shuffle} " +
+              s"broadcast_exchanges=${ex.broadcast} reused_exchanges=${ex.reused}")
           } catch {
             case e: Throwable =>
               System.err.println(s"[plandump] $name FAILED: ${e.getMessage}")

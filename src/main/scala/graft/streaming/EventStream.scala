@@ -90,68 +90,26 @@ object EventStream {
     * (`min over inputs of max event time − delay`): how many batches run
     * after the final advance under `Trigger.AvailableNow` is
     * version-sensitive, the reported value is what the engine applied.
-    */
-  /** Conf key: shuffle-partition count for STREAMING queries started via
-    * [[runToMemoryWithWatermark]], independent of the session's batch
-    * setting. Unset = inherit the session value (default; all specs and
-    * external callers are untouched).
     *
-    * Why it exists (round-8 verdict #1): a stateful streaming query's
-    * per-micro-batch fixed cost is dominated by state-store commits —
-    * one delta file fsync per state partition per batch, and a
-    * stream-stream join carries FOUR stores per partition — so at bench
-    * volumes (≤ a few hundred thousand rows/batch) 32 partitions is ~32×
-    * the necessary commit overhead with zero parallelism benefit. The
-    * partition count is captured into the query's checkpoint at FIRST
-    * start (`OffsetSeqMetadata` pins `spark.sql.shuffle.partitions`), so
-    * the knob only affects new queries, exactly as Spark semantics
-    * require; state partitioning never changes results, only where keys
-    * live — batch-parity specs pin that.
-    *
-    * At 100 TB the same knob goes the other way: state partitions are
-    * sized to keyspace × executor count, not to the batch default, and
-    * being a first-start-captured conf the choice is durable across the
-    * query's lifetime.
+    * The query's state partition count is `spark.sql.shuffle.partitions`
+    * as the session holds it when the query first starts.
     */
-  val StreamShufflePartitionsConf = "spark.graft.streaming.shufflePartitions"
-
   def runToMemoryWithWatermark(spark: SparkSession, agg: DataFrame,
       name: String, mode: OutputMode = OutputMode.Complete())
       : (DataFrame, Long) = {
-    val shuffleKey = "spark.sql.shuffle.partitions"
-    val override_ = spark.conf.getOption(StreamShufflePartitionsConf)
-    val prev = spark.conf.get(shuffleKey)
-    // set-and-restore around the WHOLE run, not just start(): the query
-    // thread snapshots session confs when it lazily clones the session,
-    // which can happen after start() returns — restoring at termination is
-    // the earliest race-free point, and the bounded AvailableNow trigger
-    // makes termination prompt
-    override_.foreach(n => spark.conf.set(shuffleKey, n))
-    val q = try {
-      val started = agg.writeStream
-        .outputMode(mode)
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      started.awaitTermination()
-      started
-    } finally override_.foreach(_ => spark.conf.set(shuffleKey, prev))
+    val q = agg.writeStream
+      .outputMode(mode)
+      .format("memory")
+      .queryName(name)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
     val wm = Option(q.lastProgress)
       .flatMap(p => Option(p.eventTime.get("watermark")))
       .map(ts => java.time.Instant.parse(ts).toEpochMilli)
       .getOrElse(0L)
-    lastProgressEvents = q.recentProgress.toSeq
     (spark.table(name), wm)
   }
-
-  /** Progress events of the most recent [[runToMemoryWithWatermark]] run —
-    * observability for StreamBench's `durationMs` decomposition (where a
-    * stateful query's wall-clock actually goes: batch execution vs trigger
-    * planning vs offset/commit log writes vs state-store commits).
-    */
-  @volatile private[graft] var lastProgressEvents:
-      Seq[org.apache.spark.sql.streaming.StreamingQueryProgress] = Nil
 
   /** The incremental report job in native Structured Streaming form: the
     * file source + checkpoint replaces the reference's hand-rolled meta

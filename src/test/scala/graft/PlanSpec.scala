@@ -2,9 +2,6 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
-  QueryStageExec}
-import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.execution.joins.{BaseJoinExec,
   BroadcastNestedLoopJoinExec, CartesianProductExec, HashJoin,
   SortMergeJoinExec}
@@ -24,19 +21,12 @@ class PlanSpec extends SparkSpec {
     df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
   }
 
-  /** The nodes of `df`'s final physical plan, after running it: AQE's
-    * adaptive node and its query stages are read through, and a reused
-    * exchange is a leaf (its subtree runs once, where it first appears).
+  /** The nodes of `df`'s final physical plan, after running it
+    * ([[PlanDump.finalPlanNodes]]).
     */
   private def finalPlanNodes(df: DataFrame): Seq[SparkPlan] = {
     df.collect()
-    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-      case s: QueryStageExec => walk(s.plan)
-      case r: ReusedExchangeExec => Seq(r)
-      case _ => p +: (p.children ++ p.subqueries).flatMap(walk)
-    }
-    walk(df.queryExecution.executedPlan)
+    PlanDump.finalPlanNodes(df.queryExecution.executedPlan)
   }
 
   /** PushedFilters/ReadSchema from the first parquet scan's metadata (the
@@ -81,6 +71,26 @@ class PlanSpec extends SparkSpec {
     // regressed.
     val exchanges = plan.split("Exchange").length - 1
     assert(exchanges <= 3, s"report1 now has $exchanges exchanges")
+  }
+
+  test("PlanDump counts exchanges on the final plan's nodes, not its text") {
+    // one per-customer aggregate read twice (its second shuffle is a
+    // reused stage), joined to a broadcast customer table
+    val perCust = spark.read.parquet(s"$sfDir/orders.parquet")
+      .groupBy("o_custkey").agg(count(lit(1)).as("n"))
+    val customers = spark.read.parquet(s"$sfDir/customer.parquet")
+      .select(col("c_custkey").as("o_custkey"), col("c_nationkey"))
+    val df = perCust.union(perCust).join(broadcast(customers), "o_custkey")
+    df.queryExecution.executedPlan.execute().count()
+    assert(PlanDump.exchangeCounts(df.queryExecution.executedPlan) ==
+      PlanDump.ExchangeCounts(shuffle = 1, broadcast = 1, reused = 1),
+      df.queryExecution.executedPlan.toString)
+    // the formatted text names each exchange in the final plan, the
+    // initial plan and the node details: a text count is several times
+    // the node count
+    val text = df.queryExecution.explainString(
+      org.apache.spark.sql.execution.FormattedMode)
+    assert("Exchange".r.findAllIn(text).size > 3)
   }
 
   test("cusum: stacked windows share one event_type exchange; mean broadcasts") {

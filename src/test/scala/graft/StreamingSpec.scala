@@ -30,12 +30,12 @@ class StreamingSpec extends SparkSpec {
     assert(got == expected)
   }
 
-  test("reduced streaming state partitions: identical results, conf restored") {
-    // the round-9 fixed-cost knob (EventStream.StreamShufflePartitionsConf)
-    // must change only WHERE state lives, never results — and must leave
-    // the session's batch shuffle setting untouched after the run
+  test("reduced streaming state partitions: identical results") {
+    // a stream's state partition count is the session's shuffle setting
+    // at its first start: it must change only WHERE state lives, never
+    // results
     val batchParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(EventStream.StreamShufflePartitionsConf, "3")
+    spark.conf.set("spark.sql.shuffle.partitions", "3")
     try {
       val stream = EventStream.readEvents(spark, eventsPath)
       val got = EventStream.runToMemory(spark,
@@ -46,9 +46,7 @@ class StreamingSpec extends SparkSpec {
         .orderBy("day", "event_type").collect().map(_.toSeq).toSeq
       assert(got == expected,
         "streaming result changed under a reduced state partition count")
-      assert(spark.conf.get("spark.sql.shuffle.partitions") == batchParts,
-        "batch shuffle partitions not restored after the streaming run")
-    } finally spark.conf.unset(EventStream.StreamShufflePartitionsConf)
+    } finally spark.conf.set("spark.sql.shuffle.partitions", batchParts)
   }
 
   test("stateful sessionize is stream-partition invariant (2 vs 5)") {
@@ -58,7 +56,8 @@ class StreamingSpec extends SparkSpec {
     // partitioning decides WHERE keys live, never what they emit
     import spark.implicits._
     def run(parts: String, name: String): Seq[Seq[Any]] = {
-      spark.conf.set(EventStream.StreamShufflePartitionsConf, parts)
+      val batchParts = spark.conf.get("spark.sql.shuffle.partitions")
+      spark.conf.set("spark.sql.shuffle.partitions", parts)
       try {
         val stream = EventStream.readEvents(spark, eventsPath)
           .select("event_id", "ts", "user_id", "event_type", "value")
@@ -68,7 +67,7 @@ class StreamingSpec extends SparkSpec {
             org.apache.spark.sql.streaming.OutputMode.Append())
           .orderBy("user_id", "session_start_epoch")
           .collect().map(_.toSeq).toSeq
-      } finally spark.conf.unset(EventStream.StreamShufflePartitionsConf)
+      } finally spark.conf.set("spark.sql.shuffle.partitions", batchParts)
     }
     val at2 = run("2", "det_sessions_p2")
     val at5 = run("5", "det_sessions_p5")
