@@ -89,8 +89,7 @@ object GraftSession {
       // recompiles its whole-stage code — a fixed ~0.3s/query inflation
       // that grows with suite size (the r5→r6 mid-pack slowdown). Sized so
       // one full suite's classes stay resident.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
     // Single-JVM local mode shares RPC dispatcher threads with the 32
     // executor threads: under full CPU saturation on a 1000×-scale
     // corpus the 10 s default heartbeat can time out 60 consecutive

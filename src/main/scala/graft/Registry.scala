@@ -4,14 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One verifiable engine query: the Spark plan plus (when SQL-expressible)
   * the equivalent DuckDB oracle SQL the driver hash-compares against.
-  *
-  * @param headline include in Bench's timed set (heavy exploratory queries
-  *                 can opt out; correctness still checks them via Verify).
   */
 final case class QueryDef(
     fn: (SparkSession, String) => DataFrame,
-    oracle: Option[String],
-    headline: Boolean = true)
+    oracle: Option[String])
 
 /** Central query registry. Each operator module under `graft.ops` contributes
   * a map of named queries; SparkEntry/Verify/Bench all read from here.

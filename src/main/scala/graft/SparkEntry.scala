@@ -17,5 +17,5 @@ object SparkEntry {
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
-    Registry.all.collect { case (name, QueryDef(_, Some(sql), _)) => name -> sql }
+    Registry.all.collect { case (name, QueryDef(_, Some(sql))) => name -> sql }
 }

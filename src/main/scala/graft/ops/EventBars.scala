@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
   * ts → Date/Time, user_id → ISIN, value → price, props.k → volume).
   *
   * Routed through [[Report1.transform]] so the verify harness exercises the
-  * exact production operator chain — explicit-frame windows, min/max/sum agg,
-  * lag pct-change, HALF_EVEN bround, string-date range filter.
+  * exact production operator chain — one min_by/max_by/min/max/sum
+  * aggregate, lag pct-change, HALF_EVEN bround, string-date range filter.
   */
 object EventBars {
 

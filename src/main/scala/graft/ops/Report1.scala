@@ -39,15 +39,17 @@ final case class Report1TargetCols(
   *
   * Same semantics as the reference's `transform_report1`
   * (`xetra/transformers/xetra_transformer.py:127-208`), re-expressed as one
-  * lazy Column-expression chain (operator order P1→P2→W1→W2→P4→A1→W3→E1→E2→P3
-  * per SURVEY.md §2.7 C2) so Catalyst fuses projection/filter into the scan
-  * and reuses the (isin, date) exchange between the two windows and the
-  * aggregation.
+  * lazy Column-expression chain: P1→P2→A1→W3→E1→E2→P3 (SURVEY.md §2.7 C2).
+  * The reference copies each group's first/last `StartPrice` by `Time` onto
+  * every row (W1/W2), renames (P4) and takes `min()` of those copies in its
+  * aggregate (A1); here W1/W2 are `min_by`/`max_by(StartPrice, Time)` inside
+  * the one (isin, date) aggregate, which gives the same prices with no
+  * whole-row window and lets Spark aggregate partially before the exchange.
   *
   * Parity traps handled here (SURVEY.md §4.4):
-  *  - W1/W2 need an explicit full frame: pandas `transform("first"/"last")`
-  *    broadcasts the group scalar to every row; Spark's default window frame
-  *    (unboundedPreceding→currentRow) silently disagrees for `last`.
+  *  - Ties: when two bars of one (isin, date) share a `Time`, `min_by`/
+  *    `max_by` pick an arbitrary one of them — as does first/last over a
+  *    `Time`-ordered window and pandas' unstable sort (SURVEY.md §2.3).
   *  - E2 rounding is `bround` (HALF_EVEN), never `round` (HALF_UP). It
   *    matches numpy's banker's rounding except at a decimal tie: `bround`
   *    rounds the decimal form (-32.675 → -32.68), numpy the binary double
@@ -75,38 +77,26 @@ object Report1 {
       src: Report1SourceCols = Report1SourceCols(),
       trg: Report1TargetCols = Report1TargetCols(),
       extractDate: String): DataFrame = {
-    // W1/W2: group-constant first/last StartPrice by Time over (isin, date).
-    // Explicit full frame — see scaladoc above.
-    val grp = Window
-      .partitionBy(col(src.isin), col(src.date))
-      .orderBy(col(src.time))
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     // W3: previous trading day's *opening* price per isin.
     val byDate = Window.partitionBy(col(src.isin)).orderBy(col(src.date))
 
-    val prevOp = "__prev_opening"
     val daily = bars
       .select(src.columns.map(col): _*)                       // P1 projection
       .na.drop("any")                                         // P2 dropna
-      .withColumn(trg.openingPrice, first(col(src.startPrice)).over(grp)) // W1
-      .withColumn(trg.closingPrice, last(col(src.startPrice)).over(grp))  // W2
-      .withColumnsRenamed(Map(                                 // P4 renames
-        src.minPrice -> trg.minPrice,
-        src.maxPrice -> trg.maxPrice,
-        src.tradedVolume -> trg.dailyTradedVolume))
       .groupBy(col(src.isin), col(src.date))                   // A1 agg
       .agg(
-        // min() of a group-constant — kept (not first()) for exact parity
-        // with the reference's agg dict (`xetra_transformer.py:176-184`).
-        min(trg.openingPrice).as(trg.openingPrice),
-        min(trg.closingPrice).as(trg.closingPrice),
-        min(trg.minPrice).as(trg.minPrice),
-        max(trg.maxPrice).as(trg.maxPrice),
-        sum(trg.dailyTradedVolume).as(trg.dailyTradedVolume))
-      .withColumn(prevOp, lag(col(trg.openingPrice), 1).over(byDate)) // W3
+        min_by(col(src.startPrice), col(src.time)).as(trg.openingPrice), // W1
+        max_by(col(src.startPrice), col(src.time)).as(trg.closingPrice), // W2
+        min(col(src.minPrice)).as(trg.minPrice),
+        max(col(src.maxPrice)).as(trg.maxPrice),
+        sum(col(src.tradedVolume)).as(trg.dailyTradedVolume))
+      // W3 lands in the target column and E1 rewrites it in place: inlined
+      // into pctChange, which reads it three times, the lag would be
+      // planned as three window expressions
+      .withColumn(trg.changePrevClosing,                       // W3 lag
+        lag(col(trg.openingPrice), 1).over(byDate))
       .withColumn(trg.changePrevClosing,                       // E1 pct change
-        pctChange(col(trg.openingPrice), col(prevOp)))
-      .drop(prevOp)
+        pctChange(col(trg.openingPrice), col(trg.changePrevClosing)))
 
     val rounded = daily.select(daily.schema.fields.map { f =>  // E2 bround(2)
       if (f.dataType == DoubleType) bround(col(f.name), 2).as(f.name)

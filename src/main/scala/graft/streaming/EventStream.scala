@@ -307,6 +307,21 @@ object EventStream {
   private def tsMicros(e: StreamEvent): Long =
     e.ts.toInstant.getEpochSecond * 1000000L + e.ts.getNanos / 1000L
 
+  /** The upsert MERGE rule: the batch's best (ts, event_id) wins only if
+    * it beats the stored row; the delivery counter always advances.
+    */
+  private def mergeLatest(userId: Long, batch: Seq[StreamEvent],
+      prev: Option[KeyedLatest]): KeyedLatest = {
+    val best = batch.maxBy(e => (tsMicros(e), e.event_id))
+    val nSeen = prev.map(_.n_seen).getOrElse(0L) + batch.size
+    val keepPrev = prev.exists(p =>
+      p.ts_micros > tsMicros(best) ||
+        (p.ts_micros == tsMicros(best) && p.event_id >= best.event_id))
+    if (keepPrev) prev.get.copy(n_seen = nSeen)
+    else KeyedLatest(userId, tsMicros(best), best.event_id,
+      cents(best.value), nSeen)
+  }
+
   /** Streaming CDC-upsert materialization — the stateful twin of the MV
     * family's maintenance queries: keep, per user, the LATEST event under
     * the (event-time, event_id) total order, merging each micro-batch
@@ -319,27 +334,6 @@ object EventStream {
     * scale-honest upsert shape (no global state, no sort). Values are
     * exact cents; ties are impossible because event_id is unique.
     */
-  /** The upsert MERGE rule shared by both stateful APIs: the batch's best
-    * (ts, event_id) wins only if it beats the stored row; the delivery
-    * counter always advances.
-    */
-  private def mergeLatest(userId: Long, batch: Seq[StreamEvent],
-      prev: Option[KeyedLatest]): KeyedLatest = {
-    val best = batch.maxBy(e => (tsMicros(e), e.event_id))
-    val nSeen = prev.map(_.n_seen).getOrElse(0L) + batch.size
-    val keepPrev = prev.exists(p =>
-      p.ts_micros > tsMicros(best) ||
-        (p.ts_micros == tsMicros(best) && p.event_id >= best.event_id))
-    if (keepPrev) prev.get.copy(n_seen = nSeen)
-    else KeyedLatest(userId, tsMicros(best), best.event_id,
-      // decimal-cast cents, NOT math.round(x*100): math.round is
-      // floor(x+0.5), which disagrees with HALF_UP for negative values
-      // (math.round(-28.5)=-28 vs HALF_UP -29) — this matches the repo's
-      // cents discipline and the batch truth's round()
-      BigDecimal(best.value).setScale(2, BigDecimal.RoundingMode.HALF_UP)
-        .underlying.unscaledValue.longValueExact, nSeen)
-  }
-
   def latestSnapshot(events: Dataset[StreamEvent]): Dataset[KeyedLatest] = {
     import events.sparkSession.implicits._
     events
@@ -350,41 +344,6 @@ object EventStream {
         state.update(next)
         next
       }
-  }
-
-  /** The same upsert on Spark 4's `transformWithState` (typed ValueState
-    * handle, RocksDB-backed store) — shares [[mergeLatest]] verbatim, so
-    * the spec's parity assertion pins the two APIs to one state machine.
-    */
-  def latestSnapshotTws(events: Dataset[StreamEvent]): Dataset[KeyedLatest] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .transformWithState(new LatestSnapshotProcessor(),
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update())
-  }
-
-  final class LatestSnapshotProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, StreamEvent, KeyedLatest] {
-    @transient private var latest:
-        org.apache.spark.sql.streaming.ValueState[KeyedLatest] = _
-
-    override def init(outputMode: OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      latest = getHandle.getValueState[KeyedLatest]("latest",
-        org.apache.spark.sql.Encoders.product[KeyedLatest],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    override def handleInputRows(userId: Long, rows: Iterator[StreamEvent],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[KeyedLatest] = {
-      val prev = if (latest.exists()) Some(latest.get()) else None
-      val next = mergeLatest(userId, rows.toVector, prev)
-      latest.update(next)
-      Iterator.single(next)
-    }
   }
 
   final case class PriorityEntry(event_id: Long, w_cents: Long,
@@ -600,8 +559,8 @@ object EventStream {
       }
   }
 
-  /** The funnel state machine shared by both stateful APIs: fold a batch
-    * of events (time-sorted) into the carried progress.
+  /** The funnel state machine: fold a batch of events (time-sorted) into
+    * the carried progress.
     */
   private def advanceFunnel(prev: FunnelProgress,
       events: Iterator[StreamEvent]): FunnelProgress =
@@ -620,50 +579,8 @@ object EventStream {
         }
       }
 
-  /** The same funnel on Spark 4's `transformWithState` — the new
-    * arbitrary-state API (typed `ValueState` handles, RocksDB-backed
-    * store, per-state TTL, timers) that supersedes
-    * `flatMapGroupsWithState` for new code. Same state machine as
-    * [[funnelStages]] (the spec asserts they emit identical final
-    * stages); requires `spark.sql.streaming.stateStore.providerClass` =
-    * RocksDBStateStoreProvider.
-    */
-  def funnelStagesTws(events: Dataset[StreamEvent]): Dataset[UserFunnel] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .transformWithState(new FunnelProcessor(),
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update())
-  }
-
-  /** Typed stateful processor holding one [[FunnelProgress]] per user. */
-  final class FunnelProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, StreamEvent, UserFunnel] {
-    @transient private var progress:
-        org.apache.spark.sql.streaming.ValueState[FunnelProgress] = _
-
-    override def init(outputMode: OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      progress = getHandle.getValueState[FunnelProgress]("progress",
-        org.apache.spark.sql.Encoders.product[FunnelProgress],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    override def handleInputRows(userId: Long, rows: Iterator[StreamEvent],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[UserFunnel] = {
-      val prev =
-        if (progress.exists()) progress.get()
-        else FunnelProgress(None, None, None)
-      val next = advanceFunnel(prev, rows)
-      progress.update(next)
-      Iterator.single(UserFunnel(userId, next.stage))
-    }
-  }
-
-  /** Decimal-cast cents — the repo's money discipline (same as
-    * [[mergeLatest]]'s inline form). NOT `math.round(v * 100)`: that is
+  /** Decimal-cast cents — the repo's money discipline, matching the batch
+    * truth's `round()`. NOT `math.round(v * 100)`: that is
     * `floor(x + 0.5)`, which disagrees with HALF_UP for negative values
     * (math.round(-28.5) = -28 vs HALF_UP -29), and the double product
     * `0.285 * 100 = 28.4999…` truncates where the decimal path

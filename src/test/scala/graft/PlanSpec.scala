@@ -5,6 +5,7 @@ import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.joins.{BaseJoinExec,
   BroadcastNestedLoopJoinExec, CartesianProductExec, HashJoin,
   SortMergeJoinExec}
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 
 /** Plan-quality regression tests: the physical plans the engine is designed
@@ -64,13 +65,17 @@ class PlanSpec extends SparkSpec {
   }
 
   test("report1 whole pipeline runs in few exchanges (window reuse)") {
-    val plan = executedPlan(ops.EventBars.report1(spark, sfDir))
-    // exactly 3: one (user, date) hash exchange shared by W1/W2 AND the
-    // aggregation (same keys -> reused), one (user) exchange for the lag,
-    // one range exchange for the final orderBy. More means the reuse
-    // regressed.
-    val exchanges = plan.split("Exchange").length - 1
-    assert(exchanges <= 3, s"report1 now has $exchanges exchanges")
+    val df = ops.EventBars.report1(spark, sfDir)
+    val nodes = finalPlanNodes(df)
+    // open/close are min_by/max_by inside the (user, date) aggregate, so
+    // the only window is the W3 lag: a second WindowExec means a
+    // whole-row window came back in front of the aggregate
+    assert(nodes.count(_.isInstanceOf[WindowExec]) == 1,
+      df.queryExecution.executedPlan.toString)
+    // one (user, date) exchange for the aggregate, one (user) exchange
+    // for the lag, one range exchange for the final orderBy
+    val shuffles = PlanDump.exchangeCounts(df.queryExecution.executedPlan).shuffle
+    assert(shuffles <= 3, s"report1 now has $shuffles shuffle exchanges")
   }
 
   test("PlanDump counts exchanges on the final plan's nodes, not its text") {

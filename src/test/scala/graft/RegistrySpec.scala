@@ -9,7 +9,7 @@ class RegistrySpec extends SparkSpec {
 
   test("every query declares either an oracle or a documented rows-only check") {
     assert(Registry.all.nonEmpty)
-    val noOracle = Registry.all.collect { case (n, QueryDef(_, None, _)) => n }
+    val noOracle = Registry.all.collect { case (n, QueryDef(_, None)) => n }
     // keep the rows-only list deliberate and small: each entry is a
     // sketch whose internals are engine-specific, gated instead by an
     // error-bound law against its exact hash-checked twin

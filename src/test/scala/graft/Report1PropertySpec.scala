@@ -67,6 +67,12 @@ class Report1PropertySpec extends SparkSpec {
           // open/close are start prices of some bar of the group
           assert(group.exists(b => b.start == open))
           assert(group.exists(b => b.start == close))
+          // with distinct Times, open/close are exactly the first/last
+          // bar's start price (tied Times leave the pick ambiguous)
+          if (group.map(_.time).distinct.length == group.length) {
+            assert(open == group.minBy(_.time).start)
+            assert(close == group.maxBy(_.time).start)
+          }
           assert(lo <= open && open <= hi && lo <= close && close <= hi)
         }
 

@@ -233,25 +233,6 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
-  test("transformWithState funnel (Spark 4 API) matches the classic-API funnel") {
-    import spark.implicits._
-    withRocksDBProvider {
-      val stream = EventStream.readEvents(spark, eventsPath)
-        .select("event_id", "ts", "user_id", "event_type", "value")
-        .as[StreamEvent]
-      val got = EventStream.runToMemory(spark,
-          EventStream.funnelStagesTws(stream).toDF(), "stream_funnel_tws",
-          org.apache.spark.sql.streaming.OutputMode.Update())
-        .groupBy("user_id").agg(max("stage").as("stage"))
-        .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-      val expected = ops.PipelineOps.funnelConversion(spark, sfDir)
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      assert(got.values.count(_ >= 1) == expected("1_view"))
-      assert(got.values.count(_ >= 2) == expected("2_click_after_view"))
-      assert(got.values.count(_ >= 3) == expected("3_purchase_after_click"))
-    }
-  }
-
   test("streaming funnel state advances across time-ordered micro-batches") {
     import spark.implicits._
     // same staging trick as the sessionization split: two time-ordered
@@ -615,33 +596,6 @@ class StreamingSpec extends SparkSpec {
       val bound = 3 * 1.04 / math.sqrt(functions.HllRegisters.M) * exact
       assert(math.abs(est - exact) <= math.max(bound, 1.0),
         s"HLL estimate $est outside 3-sigma band of exact $exact")
-    }
-  }
-
-  test("transformWithState latest-snapshot matches the classic-API upsert") {
-    withRocksDBProvider {
-      val stream = EventStream.readEvents(spark, eventsPath)
-        .select("event_id", "ts", "user_id", "event_type", "value")
-        .as[StreamEvent](org.apache.spark.sql.Encoders.product[StreamEvent])
-      val got = EventStream.runToMemory(spark,
-          EventStream.latestSnapshotTws(stream).toDF(), "latest_snap_tws",
-          org.apache.spark.sql.streaming.OutputMode.Update())
-        .groupBy("user_id")
-        .agg(max(struct(col("n_seen"), col("ts_micros"), col("event_id"),
-          col("value_cents"))).as("s"))
-        .select(col("user_id"), col("s.ts_micros"), col("s.event_id"),
-          col("s.value_cents"), col("s.n_seen"))
-        .orderBy("user_id").collect().map(_.toSeq).toSeq
-      val expected = Registry.events(spark, sfDir)
-        .groupBy("user_id")
-        .agg(max(struct(unix_micros(col("ts")).as("tm"), col("event_id"),
-            round(col("value") * 100).cast("long").as("cents"))).as("s"),
-          count(lit(1)).as("n"))
-        .select(col("user_id"), col("s.tm"), col("s.event_id"),
-          col("s.cents"), col("n"))
-        .orderBy("user_id").collect().map(_.toSeq).toSeq
-      assert(got.nonEmpty && got == expected,
-        "TWS upsert must emit the same snapshot as the classic API")
     }
   }
 
