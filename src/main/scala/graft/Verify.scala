@@ -1,6 +1,7 @@
 package graft
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare, and
   * failures.json (query name → error message; `{}` when none failed). */
@@ -42,23 +43,13 @@ object Verify {
             s"base(s) after $name")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    def json(m: Iterable[(String, String)]): String =
-      m.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
-      json(SparkEntry.oracleSql))
-    Files.writeString(Paths.get(s"$outDir/failures.json"), json(failures))
+    // string-to-string JSON objects: Jackson escapes quotes, backslashes
+    // and control characters, so the driver's json.load always parses them
+    val mapper = new ObjectMapper()
+    mapper.writeValue(new java.io.File(s"$outDir/oracle_sql.json"),
+      SparkEntry.oracleSql.asJava)
+    mapper.writeValue(new java.io.File(s"$outDir/failures.json"),
+      failures.asJava)
     spark.stop()
   }
 }

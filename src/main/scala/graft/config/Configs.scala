@@ -1,6 +1,14 @@
 package graft.config
 
-import scala.io.Source
+import java.nio.file.{Files, Paths}
+
+import scala.collection.immutable.VectorMap
+import scala.jdk.CollectionConverters._
+
+import org.yaml.snakeyaml.{DumperOptions, LoaderOptions, Yaml}
+import org.yaml.snakeyaml.constructor.SafeConstructor
+import org.yaml.snakeyaml.representer.Representer
+import org.yaml.snakeyaml.resolver.Resolver
 
 /** Job configuration — the reference's YAML sections
   * (`configs/xetra_report1_config.yaml`) as case classes (≅ the
@@ -14,12 +22,7 @@ final case class SourceConfig(
     columns: Seq[String],
     colDate: String, colIsin: String, colTime: String,
     colStartPrice: String, colMinPrice: String, colMaxPrice: String,
-    colTradedVol: String,
-    /** Non-role numeric columns typed DoubleType in the declared schema
-      * (`src_extra_double_cols`, optional). Default covers the reference's
-      * EndPrice, which is read but never used by the report.
-      */
-    extraDoubleCols: Seq[String] = Seq("EndPrice"))
+    colTradedVol: String)
 
 final case class TargetConfig(
     uri: String,
@@ -45,38 +48,35 @@ final case class LoggingConfig(rootLevel: Option[String],
 final case class JobConfig(source: SourceConfig, target: TargetConfig,
     meta: MetaConfig, logging: Option[LoggingConfig] = None)
 
-/** Minimal YAML-subset loader for the reference's config shape: sections
-  * of scalar or inline-list values, plus the nested `logging:` dictConfig
-  * section. No external YAML dependency exists in this build (zero-egress,
-  * Spark jars only), and the config grammar genuinely needed is this small.
-  * One indentation-aware [[scan]] of the text serves both readers: the
-  * two-level `source`/`target`/`meta` keys, and the logging section's root
-  * level and formatter pattern ([[Configs.parseLogging]]), which
-  * [[LogSetup]] applies to log4j2.
+/** Loader for the reference's config shape: the `source`/`target`/`meta`
+  * sections of scalar or list values, plus the nested `logging:`
+  * dictConfig section. The text is parsed by SnakeYAML (on the classpath
+  * through Spark's jars) with a resolver that adds no implicit resolvers,
+  * so every scalar stays the verbatim string the file holds: an unquoted
+  * `2021-04-17` is the text "2021-04-17", not a `java.util.Date`. The
+  * logging section's root level and formatter pattern
+  * ([[Configs.parseLogging]]) are what [[LogSetup]] applies to log4j2.
   */
 object Configs {
 
-  private type Value = Either[String, Seq[String]]
-
   def load(path: String): JobConfig = {
-    val entries = scan(Source.fromFile(path, "UTF-8").mkString)
-    val sections = entries
-      .collect { case Entry(List(sec), k, v) => (sec, k, value(v)) }
-      .groupBy(_._1).map { case (sec, kvs) => sec -> kvs.map(e => e._2 -> e._3).toMap }
-    def section(name: String): Map[String, Value] =
-      sections.getOrElse(name, sys.error(s"config: missing '$name' section"))
+    val doc = parse(Files.readString(Paths.get(path)))
+    def section(name: String): Map[String, Any] = doc.get(name) match {
+      case Some(m: Map[String, Any] @unchecked) => m
+      case _ => sys.error(s"config: missing '$name' section")
+    }
     val s = section("source")
     val t = section("target")
     val m = section("meta")
-    def one(sec: Map[String, Value], k: String): String =
+    def one(sec: Map[String, Any], k: String): String =
       sec.getOrElse(k, sys.error(s"config: missing key '$k'")) match {
-        case Left(v) => v
-        case Right(_) => sys.error(s"config: key '$k' should be scalar")
+        case v: String => v
+        case _ => sys.error(s"config: key '$k' should be scalar")
       }
-    def list(sec: Map[String, Value], k: String): Seq[String] =
+    def list(sec: Map[String, Any], k: String): Seq[String] =
       sec.getOrElse(k, sys.error(s"config: missing key '$k'")) match {
-        case Right(v) => v
-        case Left(_) => sys.error(s"config: key '$k' should be a list")
+        case v: Seq[_] => v.map(String.valueOf)
+        case _ => sys.error(s"config: key '$k' should be a list")
       }
     JobConfig(
       SourceConfig(
@@ -89,12 +89,7 @@ object Configs {
         colStartPrice = one(s, "src_col_start_price"),
         colMinPrice = one(s, "src_col_min_price"),
         colMaxPrice = one(s, "src_col_max_price"),
-        colTradedVol = one(s, "src_col_traded_vol"),
-        extraDoubleCols = s.get("src_extra_double_cols") match {
-          case Some(Right(v)) => v
-          case Some(Left(v)) => Seq(v)
-          case None => Seq("EndPrice")
-        }),
+        colTradedVol = one(s, "src_col_traded_vol")),
       TargetConfig(
         uri = one(t, "trg_uri"),
         key = one(t, "trg_key"),
@@ -109,75 +104,56 @@ object Configs {
         colDailyTradedVol = one(t, "trg_col_dail_trad_vol"),
         colChPrevClos = one(t, "trg_col_ch_prev_clos")),
       MetaConfig(metaUri = one(m, "meta_uri")),
-      logging = logging(entries))
+      logging = logging(doc))
   }
 
   /** Root level + formatter pattern of the nested `logging:` dictConfig
-    * section. The enclosing block keys tell `root: → level:` apart from the
-    * `level:` keys inside handler definitions (dictConfig semantics: the
-    * root level is what gates emission; handler levels only filter
-    * further).
+    * section: `logging.root.level`, not the `level:` keys inside handler
+    * definitions (dictConfig semantics: the root level is what gates
+    * emission; handler levels only filter further), and the last
+    * `logging.formatters.*.format`.
     */
   private[graft] def parseLogging(text: String): Option[LoggingConfig] =
-    logging(scan(text))
+    logging(parse(text))
 
-  private def logging(entries: Seq[Entry]): Option[LoggingConfig] = {
-    def last(p: Entry => Boolean): Option[String] =
-      entries.filter(e => e.path.headOption.contains("logging") && p(e))
-        .lastOption.map(e => unquote(e.value))
-    val rootLevel = last(e => e.key == "level" && e.path.last == "root")
-    val pattern = last(e => e.key == "format" && e.path.contains("formatters"))
+  private def logging(doc: Map[String, Any]): Option[LoggingConfig] = {
+    def at(node: Option[Any], key: String): Option[Any] = node.collect {
+      case m: Map[String, Any] @unchecked => m.get(key)
+    }.flatten
+    def text(node: Option[Any]): Option[String] =
+      node.collect { case v: String => v }
+    val log = doc.get("logging")
+    val rootLevel = text(at(at(log, "root"), "level"))
+    val pattern = at(log, "formatters").collect {
+      case fs: Map[String, Any] @unchecked =>
+        fs.values.flatMap(f => text(at(Some(f), "format"))).lastOption
+    }.flatten
     if (rootLevel.isEmpty && pattern.isEmpty) None
     else Some(LoggingConfig(rootLevel, pattern))
   }
 
-  /** One `key: value` line under the block keys that enclose it,
-    * outermost first.
+  /** The YAML text as nested Scala values: mappings in file order, lists,
+    * and verbatim-string scalars. An empty or non-mapping document is an
+    * empty map.
     */
-  private final case class Entry(path: List[String], key: String, value: String)
-
-  /** The one scan of the text: comments and blank lines skipped, a bare
-    * `key:` opens a block, and every `key: value` line becomes an [[Entry]].
-    */
-  private def scan(text: String): Seq[Entry] = {
-    var blocks = List.empty[(Int, String)] // (indent, key), innermost first
-    val out = Seq.newBuilder[Entry]
-    for (raw <- text.linesIterator) {
-      val line = stripComment(raw).replaceAll("\\s+$", "")
-      if (line.contains(":")) {
-        val indent = line.takeWhile(_ == ' ').length
-        val Array(k, v) = line.split(":", 2)
-        blocks = blocks.dropWhile(_._1 >= indent)
-        if (v.trim.isEmpty) blocks = (indent, k.trim) :: blocks
-        else out += Entry(blocks.reverse.map(_._2), k.trim, v.trim)
-      }
+  private def parse(text: String): Map[String, Any] = {
+    val verbatim = new Resolver {
+      override protected def addImplicitResolvers(): Unit = ()
     }
-    out.result()
-  }
-
-  /** Scalar or inline list (`[a, b, c]`); quotes stripped. */
-  private def value(v: String): Value =
-    if (v.startsWith("[") && v.endsWith("]"))
-      Right(v.substring(1, v.length - 1).split(",")
-        .map(i => unquote(i.trim)).filter(_.nonEmpty).toSeq)
-    else Left(unquote(v))
-
-  /** Strip a trailing comment, respecting quotes. */
-  private def stripComment(line: String): String = {
-    var inS = false; var inD = false
-    val b = new StringBuilder
-    for (c <- line) {
-      if (c == '\'' && !inD) inS = !inS
-      else if (c == '"' && !inS) inD = !inD
-      if (c == '#' && !inS && !inD) return b.toString
-      b.append(c)
+    val dump = new DumperOptions
+    val yaml = new Yaml(new SafeConstructor(new LoaderOptions),
+      new Representer(dump), dump, verbatim)
+    def toScala(node: Any): Any = node match {
+      case m: java.util.Map[_, _] =>
+        m.asScala.iterator
+          .map { case (k, v) => String.valueOf(k) -> toScala(v) }
+          .to(VectorMap)
+      case l: java.util.List[_] => l.asScala.map(toScala).toSeq
+      case v => v
     }
-    b.toString
+    toScala(yaml.load[Any](text)) match {
+      case m: Map[String, Any] @unchecked => m
+      case _ => Map.empty
+    }
   }
-
-  private def unquote(s: String): String =
-    if (s.length >= 2 &&
-      ((s.head == '\'' && s.last == '\'') || (s.head == '"' && s.last == '"')))
-      s.substring(1, s.length - 1)
-    else s
 }

@@ -60,11 +60,10 @@ object VectorFunctions {
     * builder). Both registration paths — per-query [[register]] and the
     * session-extensions [[GraftExtensions]] — iterate this one list, so a
     * function added here is automatically available through both and the
-    * two paths cannot drift (they had: the KLL family was register-only
-    * until this list existed).
+    * two paths cannot drift.
     *
-    * `graft_mode` and the sketch aggregates return bare AggregateFunctions:
-    * the analyzer wraps them in an AggregateExpression during resolution.
+    * The sketch aggregates return bare AggregateFunctions: the analyzer
+    * wraps them in an AggregateExpression during resolution.
     * `bloom_agg`/`bloom_might_contain` surface Spark's own runtime-join-
     * filter sketch pair (the expressions the InjectRuntimeFilter rule
     * plants) as callable functions so a query can build/apply an EXPLICIT
@@ -87,8 +86,6 @@ object VectorFunctions {
       (exprs: Seq[Expression]) => ShingleHashes(exprs.head, 2)),
     ("shingle_hashes_3", classOf[ShingleHashes],
       (exprs: Seq[Expression]) => ShingleHashes(exprs.head, 3)),
-    ("graft_mode", classOf[DeterministicMode],
-      (exprs: Seq[Expression]) => DeterministicMode(exprs.head)),
     ("bloom_agg",
       classOf[org.apache.spark.sql.catalyst.expressions.aggregate
         .BloomFilterAggregate],
@@ -117,18 +114,6 @@ object VectorFunctions {
       (exprs: Seq[Expression]) => CmsMergeAgg(exprs.head)),
     ("cms_estimate", classOf[CmsEstimate],
       (exprs: Seq[Expression]) => CmsEstimate(exprs(0), exprs(1))),
-    ("kll_sketch_200", classOf[KllSketchAgg],
-      (exprs: Seq[Expression]) => KllSketchAgg(exprs(0), exprs(1))),
-    ("kll_merge_200", classOf[KllMergeAgg],
-      (exprs: Seq[Expression]) => KllMergeAgg(exprs.head)),
-    ("kll_quantile", classOf[KllQuantileQuery],
-      (exprs: Seq[Expression]) => KllQuantileQuery(exprs(0), exprs(1), "est")),
-    ("kll_quantile_lb", classOf[KllQuantileQuery],
-      (exprs: Seq[Expression]) => KllQuantileQuery(exprs(0), exprs(1), "lb")),
-    ("kll_quantile_ub", classOf[KllQuantileQuery],
-      (exprs: Seq[Expression]) => KllQuantileQuery(exprs(0), exprs(1), "ub")),
-    ("kll_n", classOf[KllN],
-      (exprs: Seq[Expression]) => KllN(exprs.head)),
     ("md5_prefix60", classOf[Md5Prefix],
       (exprs: Seq[Expression]) => Md5Prefix(exprs.head, 15)),
     ("md5_prefix48", classOf[Md5Prefix],

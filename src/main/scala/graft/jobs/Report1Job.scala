@@ -47,8 +47,9 @@ final class Report1Job(spark: SparkSession, cfg: JobConfig, clock: Clock) {
   private val schema: StructType = {
     val c = cfg.source
     StructType(cfg.source.columns.map {
+      // EndPrice is read but never used by the report
       case n if n == c.colStartPrice || n == c.colMinPrice ||
-        n == c.colMaxPrice || c.extraDoubleCols.contains(n) =>
+        n == c.colMaxPrice || n == "EndPrice" =>
         StructField(n, DoubleType)
       case n if n == c.colTradedVol => StructField(n, LongType)
       case n => StructField(n, StringType)

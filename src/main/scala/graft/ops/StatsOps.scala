@@ -288,20 +288,20 @@ FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority
         approx_percentile(col("o_totalprice"), lit(0.99), lit(1000)).as("ap99"))
       .orderBy("o_orderpriority")
 
-  /** Per-group deterministic mode via the custom
-    * [[graft.functions.DeterministicMode]] TypedImperativeAggregate —
-    * highest count, ties to the smallest value, so the oracle (count +
-    * row_number window) reproduces it exactly. One partial-aggregated
-    * shuffle of value→count maps, same posture as any built-in agg.
+  /** Per-group mode via Spark's built-in `mode(col, deterministic = true)`:
+    * highest count, nulls ignored, equal counts break to the lowest value
+    * (UTF-8 byte order for strings), so the oracle (count + row_number
+    * window ordered by `n DESC, o_orderpriority`) reproduces it exactly.
+    * One partial-aggregated shuffle of value→count maps. The engine's own
+    * `TypedImperativeAggregate` example is the Count-Min pair
+    * ([[graft.functions.CmsSketchAgg]] / [[graft.functions.CmsMergeAgg]]).
     */
-  def modeOrderPriority(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
+  def modeOrderPriority(s: SparkSession, dir: String): DataFrame =
     table(s, dir, "orders")
       .groupBy("o_orderstatus")
-      .agg(call_function("graft_mode", col("o_orderpriority")).as("mode_priority"),
+      .agg(mode(col("o_orderpriority"), deterministic = true).as("mode_priority"),
         count(lit(1)).as("n_orders"))
       .orderBy("o_orderstatus")
-  }
 
   private val modeOracle = """
 WITH c AS (
@@ -1530,29 +1530,33 @@ FROM wt GROUP BY replicate ORDER BY replicate
   // ------------------------------------------- mergeable KLL quantiles
   /** Percentile accounting by mergeable KLL quantile sketches — the third
     * sketch next to HLL (distinct) and Count-Min (frequency), over order
-    * totals in integer cents. Each segment (order priority) reduces to a
-    * ~KiB sketch in one map-side-combined pass ([[graft.functions
-    * .KllSketchAgg]]); the global view is the UNION of the per-segment
-    * sketches ([[graft.functions.KllMergeAgg]]) — percentiles over a
+    * totals in integer cents, built from Spark's own KLL functions (the
+    * datasketches `KllLongsSketch`). Each segment (order priority) reduces
+    * to a ~KiB sketch in one map-side-combined pass
+    * (`kll_sketch_agg_bigint`); the global view is the UNION of the
+    * per-segment sketches (`kll_merge_agg_bigint`) — percentiles over a
     * 100 TB stream with no sort and no second scan, the pattern
-    * `quantilesHistogram`'s scaladoc contrasts against.
+    * `quantilesHistogram`'s scaladoc contrasts against. Estimates use
+    * INCLUSIVE search (`kll_sketch_get_quantile_bigint`, `quantile_disc`
+    * semantics); k = [[KllK]] gives a two-sided normalized rank error of
+    * about 1.65% at 99% confidence.
     *
     * Honesty columns, same presentation as `stats_hll_mergeable`: each
     * segment carries its EXACT disc quantiles (the bounded per-priority
     * histogram walk `quantilesHistogram` uses) next to the sketch
-    * estimates and the sketch's own 99% quantile bounds; the merged
-    * sketch contributes global estimates plus the one component of KLL
-    * that IS exact and order-free — the stream length — as
+    * estimates and the sketch's own 99% quantile bounds
+    * ([[kllQuantileBound]]); the merged sketch contributes global
+    * estimates plus the one component of KLL that IS exact and order-free
+    * — the stream length (`kll_sketch_get_n_bigint`) — as
     * `merge_preserves_n`. Unlike HLL/CMS there is no byte-identity merge
-    * law: KLL is a sampling sketch (coin-flip compaction, merge-order
-    * dependent — see [[graft.functions.KllDims]]), which also makes this
-    * the registry's fifth deliberate rows-only entry, excluded from
-    * DeterminismSpec like `approx_percentile` and gated instead by
-    * Round11PropertySpec's published rank-error law against exact order
-    * statistics.
+    * law: KLL is a sampling sketch (compaction flips coins from an
+    * unseeded JVM-wide source, and the result depends on merge order),
+    * which also makes this the registry's fifth deliberate rows-only
+    * entry, excluded from DeterminismSpec like `approx_percentile` and
+    * gated instead by Round11PropertySpec's published rank-error law
+    * against exact order statistics.
     */
   def kllQuantiles(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val centsCol = (col("o_totalprice")
       .cast(org.apache.spark.sql.types.DecimalType(30, 2)) * lit(100))
       .cast("long")
@@ -1564,11 +1568,11 @@ FROM wt GROUP BY replicate ORDER BY replicate
     // evaluating the aggregation once also makes the sketch BYTES
     // consistent across the query's branches instead of re-drawn per branch
     val per = o.groupBy("o_orderpriority")
-      .agg(call_function("kll_sketch_200", col("v"), lit(1L)).as("sk"),
+      .agg(kll_sketch_agg_bigint(col("v"), KllK).as("sk"),
         count(lit(1)).as("seg_n"))
       .localCheckpoint()
     val merged = per.agg(
-      call_function("kll_merge_200", col("sk")).as("msk"),
+      kll_merge_agg_bigint(col("sk"), KllK).as("msk"),
       sum("seg_n").as("sum_n"))
     // exact disc (lower) quantiles per segment: cumulative walk over the
     // per-priority value histogram — one row per DISTINCT value, windows
@@ -1584,21 +1588,39 @@ FROM wt GROUP BY replicate ORDER BY replicate
       .withColumn("n", sum("c").over(wAll))
       .groupBy("o_orderpriority")
       .agg(pick(0.5).as("exact_p50_cents"), pick(0.9).as("exact_p90_cents"))
-    def q(sk: String, mode: String, p: Double): Column =
-      call_function(s"kll_quantile$mode", col(sk), lit(p))
+    def q(sk: String, p: Double): Column =
+      kll_sketch_get_quantile_bigint(col(sk), lit(p))
     per.join(exact, "o_orderpriority")
       .crossJoin(broadcast(merged))
       .select(col("o_orderpriority"),
-        col("exact_p50_cents"), q("sk", "", 0.5).as("est_p50_cents"),
-        q("sk", "_lb", 0.5).as("lb_p50_cents"),
-        q("sk", "_ub", 0.5).as("ub_p50_cents"),
-        col("exact_p90_cents"), q("sk", "", 0.9).as("est_p90_cents"),
-        (call_function("kll_n", col("sk")) === col("seg_n")).as("seg_n_matches"),
-        q("msk", "", 0.5).as("merged_est_p50_cents"),
-        q("msk", "", 0.9).as("merged_est_p90_cents"),
-        (call_function("kll_n", col("msk")) === col("sum_n"))
+        col("exact_p50_cents"), q("sk", 0.5).as("est_p50_cents"),
+        kllQuantileBound(col("sk"), 0.5, upper = false).as("lb_p50_cents"),
+        kllQuantileBound(col("sk"), 0.5, upper = true).as("ub_p50_cents"),
+        col("exact_p90_cents"), q("sk", 0.9).as("est_p90_cents"),
+        (kll_sketch_get_n_bigint(col("sk")) === col("seg_n"))
+          .as("seg_n_matches"),
+        q("msk", 0.5).as("merged_est_p50_cents"),
+        q("msk", 0.9).as("merged_est_p90_cents"),
+        (kll_sketch_get_n_bigint(col("msk")) === col("sum_n"))
           .as("merge_preserves_n"))
       .orderBy("o_orderpriority")
+  }
+
+  /** KLL sketch size parameter of [[kllQuantiles]] (Spark's default). */
+  private[graft] val KllK = 200
+
+  /** The sketch's own 99%-confidence quantile bound at rank `p`, which
+    * Spark does not expose: datasketches 6.2.0 defines
+    * `getQuantileLowerBound(p)` as `getQuantile(max(0, p − ε))` and
+    * `getQuantileUpperBound(p)` as `getQuantile(min(1, p + ε))`, with ε the
+    * two-sided normalized rank error for k = [[KllK]].
+    */
+  private[graft] def kllQuantileBound(sk: Column, p: Double,
+      upper: Boolean): Column = {
+    val eps = org.apache.datasketches.kll.KllSketch
+      .getNormalizedRankError(KllK, false)
+    val rank = if (upper) math.min(1.0, p + eps) else math.max(0.0, p - eps)
+    kll_sketch_get_quantile_bigint(sk, lit(rank))
   }
 
   // ------------------------------- exact anchors for the sketch family

@@ -77,7 +77,8 @@ class Round11PropertySpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getLong(1)))
     val bySeg = rows.groupBy(_._1).map { case (k, a) => k -> a.map(_._2).sorted }
     val all = rows.map(_._2).sorted
-    val eps = 2 * functions.KllDims.rankError
+    val eps = 2 * org.apache.datasketches.kll.KllSketch
+      .getNormalizedRankError(200, false)
     def rankLaw(xs: Array[Long], p: Double, est: Long, what: String): Unit = {
       val n = xs.length.toDouble
       val less = xs.count(_ < est)
@@ -104,20 +105,31 @@ class Round11PropertySpec extends SparkSpec {
     }
   }
 
-  test("kll weighted update: pre-aggregated histogram feeds the identical stream") {
-    // the weight operand must mean 'this value, count times' — same contract
-    // as CmsSketchAgg — so the (value, count) histogram path carries the
-    // exact raw-row stream length
-    functions.VectorFunctions.register(spark)
-    val o = Registry.table(spark, sfDir, "orders").select(
-      (col("o_totalprice")
-        .cast(org.apache.spark.sql.types.DecimalType(30, 2)) * lit(100))
-        .cast("long").as("v"))
-    val viaHist = o.groupBy("v").agg(count(lit(1)).as("c"))
-      .agg(call_function("kll_n",
-        call_function("kll_sketch_200", col("v"), col("c"))).as("n"))
-      .collect().head.getLong(0)
-    assert(viaHist == o.count(), "weighted updates dropped stream length")
+  test("kll bounds: Spark's sketch bytes give the library's quantile and bounds") {
+    // one sketch collected once (KLL compaction is random, so re-running
+    // the aggregate would draw different bytes); the query's bound helper
+    // and Spark's quantile function must read those bytes exactly as
+    // datasketches' own KllLongsSketch does
+    import spark.implicits._
+    val bytes = Registry.table(spark, sfDir, "orders")
+      .agg(kll_sketch_agg_bigint(
+        (col("o_totalprice")
+          .cast(org.apache.spark.sql.types.DecimalType(30, 2)) * lit(100))
+          .cast("long"), ops.StatsOps.KllK))
+      .collect().head.getAs[Array[Byte]](0)
+    val lib = org.apache.datasketches.kll.KllLongsSketch.heapify(
+      org.apache.datasketches.memory.Memory.wrap(bytes))
+    val sk = Seq(Tuple1(bytes)).toDF("sk")
+    for (p <- Seq(0.5, 0.9)) {
+      val r = sk.select(
+          kll_sketch_get_quantile_bigint(col("sk"), lit(p)),
+          ops.StatsOps.kllQuantileBound(col("sk"), p, upper = false),
+          ops.StatsOps.kllQuantileBound(col("sk"), p, upper = true))
+        .head()
+      assert(r.getLong(0) == lib.getQuantile(p), s"estimate at p=$p")
+      assert(r.getLong(1) == lib.getQuantileLowerBound(p), s"lower bound at p=$p")
+      assert(r.getLong(2) == lib.getQuantileUpperBound(p), s"upper bound at p=$p")
+    }
   }
 
   test("hard negatives: every negative comes from the fixed 64-row pool") {
