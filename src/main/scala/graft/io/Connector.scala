@@ -66,6 +66,11 @@ final class Connector(spark: SparkSession, baseUri: String) {
     * index lists it, skipping hidden and `_`-marker files such as
     * `_SUCCESS`. Zero paths → typed empty relation (reference S4 fallback,
     * improved: schema kept).
+    *
+    * The files are read in the `Connector.CsvDialect`: each file is parsed
+    * as one stream, not split, so a file is the unit of parallelism (Xetra
+    * lands one file per hour) and a quoted field may hold a newline, as
+    * pandas reads it.
     */
   def readCsv(paths: Seq[String], schema: StructType): DataFrame =
     if (paths.isEmpty)
@@ -73,7 +78,7 @@ final class Connector(spark: SparkSession, baseUri: String) {
     else
       spark.read
         .schema(schema)
-        .option("header", "true")
+        .options(Connector.CsvDialect)
         .option("recursiveFileLookup", "true")
         .csv(paths: _*)
 
@@ -138,4 +143,16 @@ final class Connector(spark: SparkSession, baseUri: String) {
       true
     }
   }
+}
+
+object Connector {
+
+  /** The source CSV dialect, shared by the batch extract (`readCsv`) and
+    * its stream twin (`Report1StreamJob`): a header line, and `multiLine`,
+    * which parses each file as one univocity stream instead of one
+    * `parseLine` per line and reads a newline inside a quoted field as part
+    * of the field.
+    */
+  val CsvDialect: Map[String, String] =
+    Map("header" -> "true", "multiLine" -> "true")
 }

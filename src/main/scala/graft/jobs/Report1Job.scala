@@ -21,8 +21,10 @@ import org.apache.spark.sql.types._
   *    index lists those prefixes once: on the driver while there are at
   *    most 32 of them, above that in one listing job of at most one task
   *    per core (GraftSession). The job lists no file itself. The per-file
-  *    loop + concat of the reference collapses into Spark's native file
-  *    splits.
+  *    loop + concat of the reference collapses into that one scan, which
+  *    parses each file whole as one task (`multiLine`, see
+  *    `Connector.readCsv`): Xetra lands one file per hour, so files, not
+  *    byte ranges, are the unit of parallelism.
   *  - transform: [[Report1.transform]] (the whole C2 chain, Catalyst-fused,
   *    lazy: building it runs no Spark job).
   *  - load: timestamped target key + format-dispatched write, where the

@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions._
 object EventBars {
 
   /** events → minute-bar shape with the reference's string-typed Date/Time.
-    * `Time` is formatted to microsecond precision so lexicographic order ==
-    * timestamp order (ties: none in the driver data, checked).
+    * `Time` is formatted to microsecond precision so its time of day orders
+    * the bars as `ts` does (ties: none in the driver data, checked).
     */
   def bars(spark: SparkSession, dir: String): DataFrame =
     Registry.events(spark, dir).select(

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.types.{DoubleType, TimestampNTZType}
 
 /** Source-side column names of the minute-bar table (reference:
   * `xetra/transformers/xetra_transformer.py:13-36` — `XetraSourceConfig`).
@@ -42,12 +42,19 @@ final case class Report1TargetCols(
   * lazy Column-expression chain: P1→P2→A1→W3→E1→E2→P3 (SURVEY.md §2.7 C2).
   * The reference copies each group's first/last `StartPrice` by `Time` onto
   * every row (W1/W2), renames (P4) and takes `min()` of those copies in its
-  * aggregate (A1); here W1/W2 are `min_by`/`max_by(StartPrice, Time)` inside
-  * the one (isin, date) aggregate, which gives the same prices with no
-  * whole-row window and lets Spark aggregate partially before the exchange.
+  * aggregate (A1); here W1/W2 are `min_by`/`max_by` of `StartPrice` by
+  * `Time` inside the one (isin, date) aggregate, which gives the same prices
+  * with no whole-row window and lets Spark hash-aggregate partially before
+  * the exchange.
   *
   * Parity traps handled here (SURVEY.md §4.4):
-  *  - Ties: when two bars of one (isin, date) share a `Time`, `min_by`/
+  *  - W1/W2 order on `Time` parsed as a time of day, not on the string:
+  *    `HH:MM` and `HH:MM:SS.ffffff` then order alike, and the timestamp key
+  *    fits a hash aggregate where a string key plans a sort aggregate. The
+  *    reference sorts the string; the two agree on zero-padded times. A row
+  *    whose `Time` does not parse is dropped with P2, as a row with an
+  *    unparseable price is (README, known deviations).
+  *  - Ties: when two bars of one (isin, date) share a time, `min_by`/
   *    `max_by` pick an arbitrary one of them — as does first/last over a
   *    `Time`-ordered window and pandas' unstable sort (SURVEY.md §2.3).
   *  - E2 rounding is `bround` (HALF_EVEN), never `round` (HALF_UP). It
@@ -82,6 +89,7 @@ object Report1 {
 
     val daily = bars
       .select(src.columns.map(col): _*)                       // P1 projection
+      .withColumn(src.time, timeOfDay(col(src.time)))          // W1/W2 key
       .na.drop("any")                                         // P2 dropna
       .groupBy(col(src.isin), col(src.date))                   // A1 agg
       .agg(
@@ -105,6 +113,14 @@ object Report1 {
 
     rounded.filter(col(src.date) >= lit(extractDate))          // P3 string cmp
   }
+
+  /** `Time` as a time of day on a fixed date, null when it does not parse.
+    * A timestamp orders `HH:MM` and `HH:MM:SS.ffffff` alike and, being
+    * fixed-width, lets `min_by`/`max_by` run in a hash aggregate; a string
+    * key forces a sort aggregate that sorts every row before the exchange.
+    */
+  private def timeOfDay(time: Column): Column =
+    concat(lit("1970-01-01 "), time).try_cast(TimestampNTZType)
 
   /** Percent change vs the lagged value. Null when the previous value is 0
     * or null — an explicit guard so the plan is ANSI-safe (Spark 4's default

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.io.Connector
 import graft.ops.{Report1, Report1SourceCols, Report1TargetCols}
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -152,7 +153,7 @@ object EventStream {
     def runOnce(): Unit = {
       val bars = spark.readStream
         .schema(schema)
-        .option("header", "true")
+        .options(Connector.CsvDialect)
         .csv(sourceGlob)
       val q = bars.writeStream
         .trigger(Trigger.AvailableNow())

@@ -33,6 +33,14 @@ class JobSpec extends SparkSpec {
   private val header =
     "ISIN,Mnemonic,Date,Time,StartPrice,EndPrice,MinPrice,MaxPrice,TradedVolume"
 
+  /** The job's source schema, for tests that read CSV through `Connector`. */
+  private val barSchema = StructType(Seq(
+    StructField("ISIN", StringType), StructField("Mnemonic", StringType),
+    StructField("Date", StringType), StructField("Time", StringType),
+    StructField("StartPrice", DoubleType), StructField("EndPrice", DoubleType),
+    StructField("MinPrice", DoubleType), StructField("MaxPrice", DoubleType),
+    StructField("TradedVolume", LongType)))
+
   /** Lay out the fixture as `<date>/<date>_BINS_XETR<HH>.csv`. */
   private def layout(src: Path): Unit =
     fixtureRows.groupBy(r => (r._1, r._2)).foreach { case ((date, hour), rows) =>
@@ -196,29 +204,56 @@ class JobSpec extends SparkSpec {
   }
 
   test("malformed csv rows become nulls (PERMISSIVE) and are dropped by the report") {
-    import org.apache.spark.sql.types._
     val root = Files.createTempDirectory("malformed")
-    // row 2: non-numeric price; row 3: truncated (missing columns)
+    // row 2: non-numeric price; row 3: truncated (missing columns);
+    // row 4: a Time that is not a time of day
     Files.writeString(root.resolve("bad.csv"),
       header + "\n" +
         "AT1,SANT,2021-04-15,12:00,20.19,18.45,18.20,20.33,877\n" +
         "AT1,SANT,2021-04-15,13:00,NOT_A_PRICE,18.45,18.20,20.33,877\n" +
-        "AT1,SANT,2021-04-15\n")
-    val schema = StructType(Seq(
-      StructField("ISIN", StringType), StructField("Mnemonic", StringType),
-      StructField("Date", StringType), StructField("Time", StringType),
-      StructField("StartPrice", DoubleType), StructField("EndPrice", DoubleType),
-      StructField("MinPrice", DoubleType), StructField("MaxPrice", DoubleType),
-      StructField("TradedVolume", LongType)))
+        "AT1,SANT,2021-04-15\n" +
+        "AT1,SANT,2021-04-15,NOT_A_TIME,30.00,30.00,30.00,30.00,500\n")
     val c = new Connector(spark, root.toUri.toString)
-    val df = c.readCsv(Seq(root.resolve("bad.csv").toString), schema)
+    val df = c.readCsv(Seq(root.resolve("bad.csv").toString), barSchema)
     // PERMISSIVE (the default): unparseable cells -> null, the row survives
     // (both the bad-price row and the truncated row null out StartPrice)
-    assert(df.count() == 3)
+    assert(df.count() == 4)
     assert(df.filter(df("StartPrice").isNull).count() == 2)
     assert(df.filter(df("Mnemonic").isNull).count() == 0) // parseable prefix kept
-    // the report's na.drop (reference P2) then discards exactly those rows
-    assert(df.na.drop("any").count() == 1)
+    // the string Time reads as is; only the report finds it unparseable
+    assert(df.na.drop("any").count() == 2)
+    // the report's P2 drop discards the null-price rows and the bad-Time
+    // row alike: only the 12:00 bar is left in the day
+    val report = graft.ops.Report1.transform(df, extractDate = "2021-04-15")
+      .collect()
+    assert(report.map(r => (r.getAs[Double]("opening_price_eur"),
+      r.getAs[Double]("closing_price_eur"), r.getAs[Double]("maximum_price_eur"),
+      r.getAs[Long]("daily_traded_volume"))).toSeq ==
+      Seq((20.19, 20.19, 20.33, 877L)))
+  }
+
+  test("a quoted field holding a newline reads as one row, batch and stream") {
+    val root = Files.createTempDirectory("quoted_newline")
+    val day = root.resolve("src").resolve("2021-04-15")
+    Files.createDirectories(day)
+    Files.writeString(day.resolve("2021-04-15_BINS_XETR12.csv"),
+      header + "\n" +
+        "AT1,\"SA\nNT\",2021-04-15,12:00,20.19,18.45,18.20,20.33,877\n" +
+        "AT1,SANT,2021-04-15,13:00,18.27,21.19,18.27,21.34,455\n")
+    val bars = new Connector(spark, root.toUri.toString)
+      .readCsv(Seq(day.toString), barSchema)
+    assert(bars.orderBy("Time").collect().map(r =>
+      (r.getAs[String]("Mnemonic"), r.getAs[String]("Time"))).toSeq ==
+      Seq(("SA\nNT", "12:00"), ("SANT", "13:00")))
+    // the stream twin reads the same dialect: both bars make one day
+    val out = root.resolve("out").toString
+    new graft.streaming.EventStream.Report1StreamJob(spark,
+      s"${root.resolve("src")}/*", out, root.resolve("chk").toString, barSchema,
+      graft.ops.Report1SourceCols(), graft.ops.Report1TargetCols()).runOnce()
+    assert(spark.read.parquet(out).collect().map(r =>
+      (r.getAs[Double]("opening_price_eur"), r.getAs[Double]("closing_price_eur"),
+        r.getAs[Long]("daily_traded_volume"))).toSeq ==
+      Seq((20.19, 18.27, 1332L)))
   }
 
   test("dynamic partition overwrite replaces only the re-delivered day") {

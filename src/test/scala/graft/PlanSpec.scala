@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+import org.apache.spark.sql.execution.aggregate.{HashAggregateExec,
+  SortAggregateExec}
 import org.apache.spark.sql.execution.joins.{BaseJoinExec,
   BroadcastNestedLoopJoinExec, CartesianProductExec, HashJoin,
   SortMergeJoinExec}
@@ -67,11 +69,20 @@ class PlanSpec extends SparkSpec {
   test("report1 whole pipeline runs in few exchanges (window reuse)") {
     val df = ops.EventBars.report1(spark, sfDir)
     val nodes = finalPlanNodes(df)
+    val plan = df.queryExecution.executedPlan.toString
     // open/close are min_by/max_by inside the (user, date) aggregate, so
     // the only window is the W3 lag: a second WindowExec means a
     // whole-row window came back in front of the aggregate
-    assert(nodes.count(_.isInstanceOf[WindowExec]) == 1,
-      df.queryExecution.executedPlan.toString)
+    assert(nodes.count(_.isInstanceOf[WindowExec]) == 1, plan)
+    // min_by/max_by order on a timestamp time-of-day key, which fits a
+    // hash aggregate's buffer; a string key plans a SortAggregate that
+    // sorts every source row, partial and final
+    assert(nodes.exists(_.isInstanceOf[HashAggregateExec]), plan)
+    assert(!nodes.exists(_.isInstanceOf[SortAggregateExec]), plan)
+    // the window's input sort is the one sort in the report; the other
+    // sort is the final orderBy's global one
+    val sorts = nodes.collect { case s: SortExec => s }
+    assert(sorts.count(!_.global) == 1 && sorts.count(_.global) == 1, plan)
     // one (user, date) exchange for the aggregate, one (user) exchange
     // for the lag, one range exchange for the final orderBy
     val shuffles = PlanDump.exchangeCounts(df.queryExecution.executedPlan).shuffle

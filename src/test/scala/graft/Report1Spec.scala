@@ -88,6 +88,22 @@ class Report1Spec extends SparkSpec {
       assert(row.getAs[Double](c) == -32.68, c)
   }
 
+  test("open and close follow time order across HH:MM and HH:MM:SS.ffffff") {
+    // input order is not time order; min/max prices are not open/close
+    val mixed = Seq(
+      ("AT1", "SANT", "2021-04-19", "12:00", 12.0, 1.0, 1.0, 99.0, 1L),
+      ("AT1", "SANT", "2021-04-19", "12:00:00.000001", 13.0, 1.0, 1.0, 99.0, 1L),
+      ("AT1", "SANT", "2021-04-19", "08:00", 10.0, 1.0, 1.0, 99.0, 1L),
+      ("AT1", "SANT", "2021-04-19", "11:59:59.999999", 11.0, 1.0, 1.0, 99.0, 1L),
+      ("AT1", "SANT", "2021-04-19", "07:59:59.999999", 9.0, 1.0, 1.0, 99.0, 1L))
+      .toDF("ISIN", "Mnemonic", "Date", "Time", "StartPrice", "EndPrice",
+        "MinPrice", "MaxPrice", "TradedVolume")
+    val row = Report1.transform(mixed, extractDate = "2021-04-19").head()
+    assert(row.getAs[Double]("opening_price_eur") == 9.0)
+    assert(row.getAs[Double]("closing_price_eur") == 13.0)
+    assert(row.getAs[Long]("daily_traded_volume") == 5L)
+  }
+
   test("rows with any null are dropped before aggregation") {
     val withNull = fixture.unionByName(
       Seq(("AT0000A0E9W5", null.asInstanceOf[String], "2021-04-19", "10:00",
